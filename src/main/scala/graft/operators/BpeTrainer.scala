@@ -44,22 +44,16 @@ object BpeTrainer {
     out.toArray
   }
 
-  /** Session-lifetime merge-table cache keyed by (corpus dir, k): the
-    * trainer is deterministic, and both the train and encode registry
-    * queries need the same table — same convention as the ms chain's
-    * tensor/model stage caches. */
-  private val mergeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[Merge]]
-
-  /** Cached train for the registry queries (keyed by sf dir). */
+  /** Cached train for the registry queries, one merge table per
+    * (session, corpus dir, k): the trainer is deterministic, and both
+    * the train and encode registry queries need the same table. */
   def trainCached(
       s: SparkSession, d: String, docs: => DataFrame, k: Int): Seq[Merge] =
-    mergeCache.getOrElseUpdate((d, k),
-      graft.StoreBuilds.timed("text_bpe_merges") {
-        train(s, docs, k).collect().toSeq
-          .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
-            r.getLong(3)))
-      })
+    graft.StoreBuilds.cached(s, s"$d#k=$k", "text_bpe_merges") {
+      train(s, docs, k).collect().toSeq
+        .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
+          r.getLong(3)))
+    }
 
   /** Learn `k` merges from the corpus; returns (merge_rank, left,
     * right, pair_count) ordered by rank. */

@@ -79,38 +79,21 @@ object Dedup extends QueryPack {
   // to recompute it from raw text (first-run codegen of the typed
   // kernel was the dominant repeated cost at bench). Cache both forms
   // once per (session, dataset) — the exploded (doc_id, shingle)
-  // stream and the per-doc set rows — the same stage-store pattern as
-  // the ms tensors and the graph edge list. Both are computed
+  // stream and the per-doc set rows. Both are computed
   // map-side from documents with no shuffle, so the cache trades a
   // bounded executor-storage footprint for the repeated scan+kernel
   // cost; SUBSET calls (incremental admission's survivors/corpus
   // split) still compute directly, keyed as they are to per-query
   // filters.
-  private val shingleRowCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val shingleSetCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.Dataset[(Long, Seq[String])]]
-
   private[operators] def shinglesCached(s: SparkSession, d: String): DataFrame =
-    shingleRowCache.getOrElseUpdate(s.sparkContext.applicationId + d,
-      graft.StoreBuilds.timed("dedup_shingle_rows") {
-        val r = shingles(s, d).persist()
-        r.count() // materialize before multi-branch consumers race it
-        r
-      })
+    graft.StoreBuilds.persisted(s, d, "dedup_shingle_rows")(shingles(s, d))
 
   private[operators] def shingleSetsCached(
       s: SparkSession, d: String)
       : org.apache.spark.sql.Dataset[(Long, Seq[String])] = {
     import s.implicits._
-    shingleSetCache.getOrElseUpdate(s.sparkContext.applicationId + d,
-      graft.StoreBuilds.timed("dedup_shingle_sets") {
-        val r = shingleSets(Tables.documents(s, d))
-          .as[(Long, Seq[String])].persist()
-        r.count()
-        r
-      })
+    graft.StoreBuilds.persisted(s, d, "dedup_shingle_sets")(
+      shingleSets(Tables.documents(s, d)).as[(Long, Seq[String])])
   }
 
   /** DuckDB mirror of [[shingles]] (window-function formulation —
@@ -221,24 +204,21 @@ object Dedup extends QueryPack {
   // (Jaccard and containment) — "one pair-count computation feeds both"
   // is a session stage store, not just a comment. Bounded: distinct
   // doc pairs sharing ≥ 1 capped shingle, ≤ Σ C(df,2) with df ≤ maxDf.
-  private val pairCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[operators] def pairCountsCached(
-      s: SparkSession, d: String): DataFrame =
-    pairCountCache.getOrElseUpdate(s.sparkContext.applicationId + d, {
-      val sh = shinglesCached(s, d) // its build self-attributes
-      graft.StoreBuilds.timed("dedup_pair_counts") {
-        // hot set persisted for the materialization (it sits in both the
-        // ns and pair-gen lineage — unpersisted, the corpus-wide df
-        // aggregate ran twice per build), released right after
-        val hot = hotSet(sh, MaxShingleDf).persist()
+      s: SparkSession, d: String): DataFrame = {
+    val sh = shinglesCached(s, d)
+    graft.StoreBuilds.cached(s, d, "dedup_pair_counts") {
+      // hot set persisted for the materialization (it sits in both the
+      // ns and pair-gen lineage — unpersisted, the corpus-wide df
+      // aggregate ran twice per build), released right after
+      val hot = hotSet(sh, MaxShingleDf).persist()
+      try {
         val r = pairCountsGiven(s, sh, hot, MaxShingleDf).persist()
         r.count()
-        hot.unpersist()
         r
-      }
-    })
+      } finally hot.unpersist()
+    }
+  }
 
   // The prefix index — each doc's rarity PREFIX rows carrying the
   // (rank, set size) the PPJoin filters need, per-doc capped set
@@ -256,16 +236,11 @@ object Dedup extends QueryPack {
   // ~8 bytes per token instead of a ~20-char string and intersects
   // longs (measured at the 10× replica: the string-array verify was
   // 72 s of payload shuffle for 1.25M candidates).
-  private val ppjoinStageCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, (DataFrame, DataFrame, DataFrame)]
-
   private[operators] def ppjoinStagesCached(
-      s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
-    ppjoinStageCache.getOrElseUpdate(s.sparkContext.applicationId + d, {
-      import org.apache.spark.sql.expressions.Window
-      val sh = shinglesCached(s, d) // its build self-attributes
-      graft.StoreBuilds.timed("dedup_prefix_index") {
+      s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    val sh = shinglesCached(s, d)
+    graft.StoreBuilds.cached(s, d, "dedup_prefix_index") {
       val dfreq = sh.groupBy("s").agg(count(lit(1)).as("df"))
       val ids = dfreq.filter(col("df") <= MaxShingleDf)
         // injective pack (crc32-bucket << 40 | rank-within-bucket):
@@ -290,31 +265,32 @@ object Dedup extends QueryPack {
         .withColumn("rk", row_number().over(
           Window.partitionBy("doc_id").orderBy(col("df"), col("s"))))
         .persist()
-      val setsNs = ranked.groupBy("doc_id")
-        .agg(count(lit(1)).as("nsh"),
-          sort_array(collect_list(col("tid"))).as("tids"))
-        .persist()
-      val pref = ranked
-        .join(setsNs.select(col("doc_id"), col("nsh")), "doc_id")
-        .filter(col("rk") <=
-          // the base prefix DERIVES from PpjoinBaseTauPpm (the τ₀
-          // ceil-form n − ⌈τ₀·n⌉ + 1, here ⌈n/2⌉ at τ₀ = 0.5) — one
-          // definition, so lowering the base threshold automatically
-          // widens the stored prefix instead of silently breaking
-          // ppjoinPlan's "the store covers every τ ≥ τ₀" guarantee
-          col("nsh") - expr(
-            s"($PpjoinBaseTauPpm * nsh + 999999) div 1000000") + 1)
-        .select("doc_id", "s", "rk", "nsh")
-        .persist()
-      // one action materializes ranked, setsNs (via the join's build
-      // side) and pref; the window stage cache releases after
-      pref.count()
-      setsNs.count()
-      ranked.unpersist()
-      (pref, setsNs.select(col("doc_id"), col("nsh")),
-        setsNs.select(col("doc_id"), col("tids")))
-      }
-    })
+      try {
+        val setsNs = ranked.groupBy("doc_id")
+          .agg(count(lit(1)).as("nsh"),
+            sort_array(collect_list(col("tid"))).as("tids"))
+          .persist()
+        val pref = ranked
+          .join(setsNs.select(col("doc_id"), col("nsh")), "doc_id")
+          .filter(col("rk") <=
+            // the base prefix DERIVES from PpjoinBaseTauPpm (the τ₀
+            // ceil-form n − ⌈τ₀·n⌉ + 1, here ⌈n/2⌉ at τ₀ = 0.5) — one
+            // definition, so lowering the base threshold automatically
+            // widens the stored prefix instead of silently breaking
+            // ppjoinPlan's "the store covers every τ ≥ τ₀" guarantee
+            col("nsh") - expr(
+              s"($PpjoinBaseTauPpm * nsh + 999999) div 1000000") + 1)
+          .select("doc_id", "s", "rk", "nsh")
+          .persist()
+        // one action materializes ranked, setsNs (via the join's build
+        // side) and pref; the window stage cache releases after
+        pref.count()
+        setsNs.count()
+        (pref, setsNs.select(col("doc_id"), col("nsh")),
+          setsNs.select(col("doc_id"), col("tids")))
+      } finally ranked.unpersist()
+    }
+  }
 
   /** ExactSubstr threshold (tokens): a span is removed when a verbatim
     * copy of ≥ this many tokens occurs anywhere else in the corpus —
@@ -407,26 +383,16 @@ object Dedup extends QueryPack {
   // by five queries (ngram_jaccard, lsh_eval, lsh_sweep, cluster,
   // keep_list) and each paid the posting-list pair kernel again. The
   // result is Zipf-small (hundreds of rows at test scale, bounded by
-  // real duplication at any scale) — the third session stage store,
-  // alongside the shingle and graph-edge caches.
-  private val nearPairCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
+  // real duplication at any scale).
   private def jaccardPairsHalfCached(
-      s: SparkSession, d: String): DataFrame =
-    nearPairCache.getOrElseUpdate(s.sparkContext.applicationId + d, {
-      val pc = pairCountsCached(s, d) // its build self-attributes
-      graft.StoreBuilds.timed("dedup_near_pairs") {
-        val r = pc
-          .withColumn("jaccard",
-            col("c").cast("double") / (col("nsh1") + col("nsh2") - col("c")))
-          .filter(col("jaccard") >= 0.5)
-          .select(col("d1"), col("d2"), col("jaccard"))
-          .persist()
-        r.count()
-        r
-      }
-    })
+      s: SparkSession, d: String): DataFrame = {
+    val pc = pairCountsCached(s, d)
+    graft.StoreBuilds.persisted(s, d, "dedup_near_pairs")(pc
+      .withColumn("jaccard",
+        col("c").cast("double") / (col("nsh1") + col("nsh2") - col("c")))
+      .filter(col("jaccard") >= 0.5)
+      .select(col("d1"), col("d2"), col("jaccard")))
+  }
 
   /** DuckDB mirror of the stop-shingle removal: the capped shingle
     * stream `shc` feeds ns/common in the capped-Jaccard oracles. */
@@ -440,6 +406,8 @@ object Dedup extends QueryPack {
     * pointer-jumped label propagation, shared by the near-dup cluster
     * query and the consensus keep-list. Returns (doc_id, canonical_id)
     * for every node appearing in a pair; canonical_id = component min.
+    * The returned RDD is persisted: the caller releases it after its
+    * terminal action.
     *
     * Runs the fixpoint on the RDD API — the one iterative loop in the
     * engine where DataFrames are the WRONG tool: every label
@@ -456,7 +424,8 @@ object Dedup extends QueryPack {
     * (canonical := canonical(canonical) each round), probed by the
     * strictly-decreasing Σ canonical_id (min-label only ever lowers a
     * label; BigInt — no overflow at any corpus size). */
-  private[operators] def minLabelComponents(rawPairs: DataFrame): DataFrame = {
+  private[operators] def minLabelComponents(rawPairs: DataFrame)
+      : org.apache.spark.rdd.RDD[(Long, Long)] = {
     val s = rawPairs.sparkSession
     import s.implicits._
     val nParts = 8 // label tables are O(near-dup docs) — tiny vs corpus
@@ -525,7 +494,7 @@ object Dedup extends QueryPack {
         println(f"[cc] round done at ${System.nanoTime() / 1e9}%.2f")
     }
     edges.unpersist()
-    labels.toDF("doc_id", "canonical_id")
+    labels
   }
 
   /** (doc_id, distinct word-3-shingle set) — stateless map-side prep
@@ -720,13 +689,8 @@ object Dedup extends QueryPack {
   // DedupResumeSpec against explicit partial stores, the same split as
   // the ms chain (in-memory caches in the registry, disk stores in the
   // resumable API + specs).
-  private val bandStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def bandStorePath(s: SparkSession, d: String): String =
-    bandStoreCache.getOrElseUpdate(s.sparkContext.applicationId + d,
-      graft.sparkutil.TempStores.scratchDir("graft-band-index")
-        + "/store")
+    graft.StoreBuilds.scratchDir(s, d, "graft-band-index") + "/store"
 
   /** DuckDB mirror of [[minhashBandRows]] (expects `shingles` in scope —
     * compose with [[docShinglesCte]]). */
@@ -1601,10 +1565,17 @@ object Dedup extends QueryPack {
     // standard large-graph CC shape (at 100 TB the edge join shuffles
     // by label instead of broadcasting, same loop).
     "q_dedup_cluster" -> GraftQuery(
-      run = (s, d) =>
-        minLabelComponents(
+      run = (s, d) => {
+        import s.implicits._
+        val labels = minLabelComponents(
           jaccardPairsHalfCached(s, d).select(col("d1"), col("d2")))
-          .orderBy("doc_id"),
+        // one row per doc in a near-dup pair (Zipf-small): collect,
+        // then release the label RDD
+        val rows =
+          try labels.collect()
+          finally labels.unpersist()
+        rows.sortBy(_._1).toSeq.toDF("doc_id", "canonical_id")
+      },
       oracle = Some(s"""
         WITH RECURSIVE $shinglesCte,
         $cappedShinglesCte,
@@ -1801,7 +1772,8 @@ object Dedup extends QueryPack {
         // while the lazy branches pipeline at full width
         val edges = exPairs.unionByName(urlPairs).unionByName(nearPairs)
           .distinct()
-        val labels = minLabelComponents(edges)
+        import s.implicits._
+        val labels = minLabelComponents(edges).toDF("doc_id", "canonical_id")
         val comp = labels.groupBy(col("canonical_id").as("cid"))
           .agg(count(lit(1)).as("nc"))
         docs.select(col("doc_id"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, QueryPack, Tables}
+import graft.sparkutil.ScalableRank.materializeAndRelease
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over relationally-derived graphs — the operator class
@@ -87,64 +88,43 @@ object GraphOps extends QueryPack {
   // triangles, BFS, label propagation, and link prediction all start
   // from it, and each used to rebuild the fact-fact self-join +
   // distinct (~2–3 s at sf0.1) from scratch. Cache it once per
-  // (session, dataset), the same pattern the ms chain uses for
-  // tensors/models: |E| is two longs per row (~15 MB at sf0.1 — an
-  // aggregate-sized intermediate, not data-scale), materialized with
-  // one action so sibling branches of a consuming job never race the
-  // un-materialized cache into a recompute.
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.DataFrame]
-
+  // (session, dataset): |E| is two longs per row (~15 MB at sf0.1 —
+  // an aggregate-sized intermediate, not data-scale).
   private def coPurchaseEdgesCached(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    edgeCache.getOrElseUpdate(s.sparkContext.applicationId + d,
-      graft.StoreBuilds.timed("graph_copurchase_edges") {
-        val e = coPurchaseEdges(s, d).persist()
-        e.count()
-        e
-      })
+    graft.StoreBuilds.persisted(s, d, "graph_copurchase_edges")(
+      coPurchaseEdges(s, d))
 
   // The DIRECTED (both-direction) co-purchase adjacency is its own
   // stage store: BFS, label propagation, and link prediction all start
   // from it, and each used to rebuild + persist its own
   // union-of-both-directions per call (~1 s at sf0.1, 2|E| rows of two
-  // longs — still aggregate-sized). Ledgered like every session store.
-  private val dirEdgeCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.DataFrame]
-
+  // longs — still aggregate-sized).
   private def directedEdgesCached(
       s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    dirEdgeCache.getOrElseUpdate(s.sparkContext.applicationId + d, {
-      // resolve the undirected store FIRST so its build lands in its
-      // own ledger entry, not double-counted into this one
-      val e0 = coPurchaseEdgesCached(s, d)
-      graft.StoreBuilds.timed("graph_directed_edges") {
-        // persisted HASH-PARTITIONED ON src: every consumer keys on it
-        // (label_prop's per-round (src,lbl) mode aggregate, BFS's
-        // frontier-relax join, link prediction's adjacency) — paying
-        // ONE exchange at build time makes every round's aggregate
-        // exchange-free, because HashPartitioning(src) satisfies
-        // ClusteredDistribution((src, lbl)) and the broadcast join
-        // preserves the streamed side's partitioning (label_prop at
-        // sf0.1: 72 MB shuffled per run → per-round zero; only the
-        // |V|-sized label broadcast moves). The partition count is
-        // EXPLICIT: with a bare repartition(col) AQE is free to
-        // coalesce the cached exchange to ~1 partition at this data
-        // size and every later round runs single-threaded — the exact
-        // pathology the kcore note records for its persisted rounds.
-        val e = e0.select(col("u").as("src"), col("v").as("dst"))
-          .unionByName(e0.select(col("v").as("src"), col("u").as("dst")))
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
-            col("src"))
-          .persist()
-        e.count()
-        e
-      }
-    })
+      d: String): org.apache.spark.sql.DataFrame = {
+    val e0 = coPurchaseEdgesCached(s, d)
+    graft.StoreBuilds.persisted(s, d, "graph_directed_edges") {
+      // persisted HASH-PARTITIONED ON src: every consumer keys on it
+      // (label_prop's per-round (src,lbl) mode aggregate, BFS's
+      // frontier-relax join, link prediction's adjacency) — paying
+      // ONE exchange at build time makes every round's aggregate
+      // exchange-free, because HashPartitioning(src) satisfies
+      // ClusteredDistribution((src, lbl)) and the broadcast join
+      // preserves the streamed side's partitioning (label_prop at
+      // sf0.1: 72 MB shuffled per run → per-round zero; only the
+      // |V|-sized label broadcast moves). The partition count is
+      // EXPLICIT: with a bare repartition(col) AQE is free to
+      // coalesce the cached exchange to ~1 partition at this data
+      // size and every later round runs single-threaded — the exact
+      // pathology the kcore note records for its persisted rounds.
+      e0.select(col("u").as("src"), col("v").as("dst"))
+        .unionByName(e0.select(col("v").as("src"), col("u").as("dst")))
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
+          col("src"))
+    }
+  }
 
   /** The co-purchase edge list as a DuckDB CTE (mirror of
     * [[coPurchaseEdges]]). */
@@ -154,53 +134,28 @@ object GraphOps extends QueryPack {
           FROM lineitem a JOIN lineitem b
             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)"""
 
-  /** Materialize a small (aggregate-sized) result, release the plan's
-    * caches, and return the rows as a local frame — returning the lazy
-    * plan would pin the caches in executor storage for the session
-    * (the q_sim_ivfpq leak class). The lazy builders below stay
-    * exposed so `PlanGuardSpec` can still assert the REAL physical
-    * plan (the materialized frame is just a LocalTableScan). */
-  private def materializeAndRelease(
-      s: org.apache.spark.sql.SparkSession,
-      out: org.apache.spark.sql.DataFrame,
-      caches: Seq[org.apache.spark.sql.DataFrame])
-      : org.apache.spark.sql.DataFrame =
-    // shared copy (r12): lifted to sparkutil so Scale/Window
-    // materializing queries release caches through the same
-    // collect-in-try / unpersist-in-finally path
-    graft.sparkutil.ScalableRank.materializeAndRelease(s, out, caches)
-
   // The weighted trade-edge list (supplier nation → customer nation,
   // w = shipped lineitems) is the SECOND shared stage boundary of this
   // pack: global PageRank, personalized PageRank, and weighted SSSP
   // all start from it, and each used to rebuild the 4-table fact join
-  // (~2–3 s at sf0.1) from scratch. Session-cached like
-  // coPurchaseEdgesCached: |nations|² rows — a constant-sized
-  // aggregate at ANY corpus scale — materialized with one action.
-  private val tradeEdgeCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.DataFrame]
-
+  // (~2–3 s at sf0.1) from scratch. |nations|² rows — a
+  // constant-sized aggregate at ANY corpus scale.
   private def tradeEdgesCached(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    tradeEdgeCache.getOrElseUpdate(s.sparkContext.applicationId + d,
-      graft.StoreBuilds.timed("graph_trade_edges") {
+    graft.StoreBuilds.persisted(s, d, "graph_trade_edges") {
       val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
       val ord = Tables.orders(s, d).select("o_orderkey", "o_custkey")
       val cust = Tables.customer(s, d).select("c_custkey", "c_nationkey")
       val supp = Tables.supplier(s, d).select("s_suppkey", "s_nationkey")
-      val e = li
+      li
         .join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
         .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("s_nationkey").as("src"),
           col("c_nationkey").as("dst"))
         .agg(count(lit(1)).as("w"))
-        .persist()
-      e.count()
-      e
-      })
+    }
 
   /** Lazy PageRank plan + the caches it reads (empty if the zero-node
     * guard already released them). */
@@ -402,7 +357,7 @@ object GraphOps extends QueryPack {
   /** Bounded weighted shortest-path: materializes [[ssspLoop]]'s
     * output (aggregate-sized — ≤ |nations| rows), releases the
     * per-round truncation RDDs the plan reads, and hands the node
-    * cache up for [[materializeAndRelease]]. */
+    * cache up for [[ScalableRank.materializeAndRelease]]. */
   private[operators] def ssspPlan(
       s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.DataFrame]) = {
@@ -857,7 +812,7 @@ object GraphOps extends QueryPack {
 
   /** Materialized label-propagation result: collects [[lpaLoop]]'s
     * output (|V| rows — the registry query's own contract, exactly
-    * what [[materializeAndRelease]] did before truncation) and
+    * what [[ScalableRank.materializeAndRelease]] did before truncation) and
     * releases the last round's RDD blocks. */
   private[operators] def labelPropPlan(
       s: org.apache.spark.sql.SparkSession, d: String)

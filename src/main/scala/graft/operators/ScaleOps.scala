@@ -301,8 +301,7 @@ object ScaleOps extends QueryPack {
     // plan shape with broadcast disabled.
     "q_scale_bucketed_join" -> GraftQuery(
       run = (s, d) => {
-        val wh = s"${sys.props("java.io.tmpdir")}/graft_wh_" +
-          s.sparkContext.applicationId
+        val wh = graft.StoreBuilds.scratchDir(s, d, "graft-wh")
         val ev = Tables.events(s, d).select(
           col("user_id"), col("event_type"), col("value"))
         ev.write.mode("overwrite")
@@ -490,8 +489,8 @@ object ScaleOps extends QueryPack {
     // row is decoded. `PlanGuardSpec` asserts the pruned scan.
     "q_scale_partition_pruning" -> GraftQuery(
       run = (s, d) => {
-        val layout = s"${sys.props("java.io.tmpdir")}/graft_pp_" +
-          s.sparkContext.applicationId
+        val layout =
+          graft.StoreBuilds.scratchDir(s, d, "graft-pp") + "/layout"
         Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
@@ -1643,8 +1642,8 @@ object ScaleOps extends QueryPack {
     // arbitrary but deterministic, and NOT constant-foldable.
     "q_scale_dpp" -> GraftQuery(
       run = (s, d) => {
-        val layout = s"${sys.props("java.io.tmpdir")}/graft_dpp_" +
-          s.sparkContext.applicationId
+        val layout =
+          graft.StoreBuilds.scratchDir(s, d, "graft-dpp") + "/layout"
         Tables.events(s, d)
           .select(col("event_id"), col("event_type"), col("value"))
           .write.mode("overwrite").partitionBy("event_type").parquet(layout)

@@ -173,10 +173,6 @@ object Similarity extends QueryPack {
                FROM sc JOIN nrm na ON na.vec_id = sc.q_id
                        JOIN nrm nb ON nb.vec_id = sc.n_id)"""
 
-  private val ivfpqCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.DataFrame]
-
   // ------------------------------------------------------------------
   // Durable IVF-assignment store — the vector-index twin of the dedup
   // pack's band-index store: (vec_id, list) assignments persist as
@@ -187,13 +183,8 @@ object Similarity extends QueryPack {
   // increment-independent: however many batches built the store, it
   // equals a from-scratch assignment — which is exactly what the
   // oracle recomputes.
-  private val ivfStoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def ivfStorePath(s: SparkSession, d: String): String =
-    ivfStoreCache.getOrElseUpdate(s.sparkContext.applicationId + d,
-      graft.sparkutil.TempStores.scratchDir("graft-ivf-index")
-        + "/store")
+    graft.StoreBuilds.scratchDir(s, d, "graft-ivf-index") + "/store"
 
   /** Resumable assignment upsert: anti-join against the store's
     * vec_ids (plus WITHIN-batch dedup — a re-delivered vector must not
@@ -1000,9 +991,8 @@ object Similarity extends QueryPack {
       // this query to compare against brute force, and without the memo
       // it paid the whole index build again. Working caches inside the
       // build are still released per run (CacheHygieneSpec).
-      run = (s, d) => ivfpqCache.getOrElseUpdate(
-        s.sparkContext.applicationId + d,
-        graft.StoreBuilds.timed("sim_ivfpq_index")(ivfpqBuild(s, d))),
+      run = (s, d) =>
+        graft.StoreBuilds.cached(s, d, "sim_ivfpq_index")(ivfpqBuild(s, d)),
       oracle = Some(s"""
         WITH $unnestCte,
         $ivfpqCtes

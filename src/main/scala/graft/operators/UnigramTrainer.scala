@@ -146,15 +146,10 @@ object UnigramTrainer {
       .sortBy(pc => (-pc.freq, pc.piece))
   }
 
-  /** Session-lifetime vocab cache keyed by corpus dir — the same
-    * convention as [[BpeTrainer.trainCached]]. */
-  private val vocabCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Piece]]
-
+  /** Cached train, one vocab per (session, corpus dir). */
   def trainCached(
       s: SparkSession, d: String, docs: => DataFrame): Seq[Piece] =
-    vocabCache.getOrElseUpdate(d,
-      graft.StoreBuilds.timed("text_unigram_vocab")(train(s, docs)))
+    graft.StoreBuilds.cached(s, d, "text_unigram_vocab")(train(s, docs))
 
   /** Viterbi-encode the corpus with a trained vocab: per-document
     * (chars_in, tokens_out, compression) — the same output contract as

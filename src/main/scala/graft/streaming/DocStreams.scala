@@ -48,11 +48,6 @@ object DocStreams extends QueryPack {
     reader.parquet(dir)
   }
 
-  /** Scratch band-index store per (session, dataset) for the streaming
-    * index-upsert query — see its run() comment. */
-  private val indexScratch =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** (doc_id, partner) stream: every document that shares a MinHash band
     * key with an already-seen document, paired with that key's canonical
     * (first-seen) doc. First-ARRIVAL-wins: the state per band key is the
@@ -257,15 +252,11 @@ object DocStreams extends QueryPack {
     // maintenance converge on one artifact.
     "q_stream_index_upsert" -> GraftQuery(
       run = (s, d) => {
-        // scratch store cached per (session, dataset), NOT per call: a
-        // fresh dir per invocation accumulates a full band-index copy
-        // in tmp per run until JVM exit (the leak EventStreams'
-        // mvScratch comment names) — and the anti-join resume makes
-        // reuse both correct and cheaper (a second run indexes nothing)
-        val store = indexScratch.getOrElseUpdate(
-          s.sparkContext.applicationId + d,
-          graft.sparkutil.TempStores
-            .scratchDir("graft-stream-band-index") + "/store")
+        // one scratch store per (session, dataset), NOT per call: the
+        // anti-join resume makes reuse both correct and cheaper (a
+        // second run indexes nothing)
+        val store = graft.StoreBuilds
+          .scratchDir(s, d, "graft-stream-band-index") + "/store"
         val docs = docStream(s, d)
           .select(col("doc_id"), col("text"))
         val q = docs.writeStream

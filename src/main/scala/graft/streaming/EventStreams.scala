@@ -164,11 +164,6 @@ object EventStreams extends QueryPack {
     else df.withColumn("ts", expr("unix_micros(cast(ts as timestamp)) * 1000"))
   }
 
-  /** Scratch (landing, store) pair per (session, dataset) for the
-    * streaming view-maintenance query — see its run() comment. */
-  private val mvScratch =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   /** Streaming micro-batch plans are sized explicitly (AQE never
     * re-plans them): 8 state-store partitions instead of the session's
     * batch setting — every stateful operator initializes one state
@@ -676,11 +671,9 @@ object EventStreams extends QueryPack {
     // aggregate — hence a full DuckDB oracle.
     "q_stream_foreachbatch" -> GraftQuery(
       run = (s, d) => {
-        // fixed per-session sink path + overwrite mode: repeated runs
-        // (verify dumps, bench rounds) reuse one directory instead of
-        // leaking a temp dir per invocation
-        val out = s"${sys.props("java.io.tmpdir")}/graft_fb_" +
-          s.sparkContext.applicationId
+        // overwrite mode into the session's one sink dir: repeated
+        // runs (verify dumps, bench rounds) reuse it
+        val out = graft.StoreBuilds.scratchDir(s, d, "graft-fb-sink")
         val stream = eventStream(s, d)
           .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
           .withWatermark("event_time", "10 minutes")
@@ -726,11 +719,9 @@ object EventStreams extends QueryPack {
         // invocations (a bench/verify session calls a query several
         // times; fresh dirs per call would accumulate full copies of
         // the events table in tmp until JVM exit)
-        val (landing, store) = mvScratch.getOrElseUpdate(
-          s.sparkContext.applicationId + d,
-          (graft.sparkutil.TempStores.scratchDir("graft-mv-landing"),
-            graft.sparkutil.TempStores.scratchDir("graft-mv-store")
-              + "/view"))
+        val landing = graft.StoreBuilds.scratchDir(s, d, "graft-mv-landing")
+        val store =
+          graft.StoreBuilds.scratchDir(s, d, "graft-mv-store") + "/view"
         graft.Tables.events(s, d)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"), col("props"))
@@ -806,11 +797,9 @@ object EventStreams extends QueryPack {
     // rows land, and the stored view is never recomputed from facts.
     "q_stream_mv_retract" -> GraftQuery(
       run = (s, d) => {
-        val (landing, store) = mvScratch.getOrElseUpdate(
-          s.sparkContext.applicationId + d + ":retract",
-          (graft.sparkutil.TempStores.scratchDir("graft-mvr-landing"),
-            graft.sparkutil.TempStores.scratchDir("graft-mvr-store")
-              + "/view"))
+        val landing = graft.StoreBuilds.scratchDir(s, d, "graft-mvr-landing")
+        val store =
+          graft.StoreBuilds.scratchDir(s, d, "graft-mvr-store") + "/view"
         val isDel = expr("event_id % 97 = 0")
         val isUpd = expr("event_id % 89 = 0 AND event_id % 97 <> 0")
         val vm = expr("CAST(floor(value * 10000.0 + 0.5) AS BIGINT)")

@@ -9,7 +9,8 @@ import org.scalatest.BeforeAndAfterAll
 /** Registry queries that persist intermediates must release them before
   * returning: a pipeline invoking a query repeatedly (as
   * q_sim_ivfpq_recall composes q_sim_ivfpq) must not accumulate
-  * executor storage across invocations. */
+  * executor storage across invocations. Only the session stage stores
+  * (graft.StoreBuilds) stay persisted. */
 class CacheHygieneSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
@@ -56,5 +57,43 @@ class CacheHygieneSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll 
           seen.size should be <= 3
         }
       }
+  }
+
+  private def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Run `pack` twice: the first run leaves exactly `storeRdds` new
+    * persisted RDDs (its stage stores), and the second run leaves the
+    * same set — a rebuilt store or a leaked working cache would add
+    * to it. */
+  private def assertStoresStable(pack: Seq[String], storeRdds: Int): Unit = {
+    val before = persistedIds
+    def runPack(): Set[Int] = {
+      pack.foreach { q =>
+        withClue(q) {
+          SparkEntry.queries(q)(spark, sf).count() should be >= 0L
+        }
+      }
+      persistedIds -- before
+    }
+    val first = runPack()
+    first.size shouldBe storeRdds
+    runPack() shouldBe first
+  }
+
+  test("dedup queries leave only their stage stores, the same set on a rerun") {
+    assume(new java.io.File(s"$sf/documents.parquet").exists)
+    // dedup_shingle_rows, dedup_shingle_sets, dedup_pair_counts,
+    // dedup_near_pairs, and dedup_prefix_index (two RDDs: the prefix
+    // rows and the per-doc set arrays)
+    assertStoresStable(
+      Seq("q_dedup_cluster", "q_dedup_ppjoin", "q_dedup_lsh_eval"), 6)
+  }
+
+  test("ms queries leave only their stage stores, the same set on a rerun") {
+    assume(new java.io.File(s"$sf/lineitem.parquet").exists)
+    // ms_slice_tensors, ms_parafac_models, ms_peak_counts
+    assertStoresStable(
+      Seq("q_ms_tensorize", "q_ms_decompose", "q_ms_best_models"), 3)
   }
 }

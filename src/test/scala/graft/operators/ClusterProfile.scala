@@ -47,7 +47,8 @@ object ClusterProfile {
       r
     }
     val labels = time("CC fixpoint") {
-      Dedup.minLabelComponents(pairs)
+      import spark.implicits._
+      Dedup.minLabelComponents(pairs).toDF("doc_id", "canonical_id")
     }
     time("final orderBy+count") {
       println(s"[cprof]   labels = ${labels.orderBy("doc_id").count()}")
