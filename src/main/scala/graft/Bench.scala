@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   @volatile private var canarySink: Long = 0L
 
@@ -45,7 +45,7 @@ object Bench {
           case _ => (None, Map.empty)
         }
       }
-    } catch { case scala.util.control.NonFatal(_) => (None, Map.empty) }
+    } catch { case NonFatal(_) => (None, Map.empty) }
       // a corrupt history must not kill the bench; the criterion just
       // falls back to 2 s flat
 
@@ -84,19 +84,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition coalescing inside cached plans (iterative loops)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // warm the session (codegen, parquet footer cache, shuffle infra) so
     // the first measured query isn't charged the JVM startup — and touch
     // EVERY fact table, or the alphabetically-first query per table pays
@@ -105,7 +93,9 @@ object Bench {
     Seq("lineitem", "orders", "events", "documents", "embeddings")
       .foreach { t =>
         try spark.read.parquet(s"$sfDir/$t.parquet").count()
-        catch { case _: Throwable => }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] warm-up read of $t failed: $e")
+        }
       }
     // Load canary: a fixed CPU-bound probe timed before and after the
     // run. The probe's cost is invariant, so end/start ≫ 1 means

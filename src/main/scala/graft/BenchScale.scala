@@ -81,21 +81,6 @@ object BenchScale {
     fs.create(marker, true).close()
   }
 
-  private def newSession(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def warm(s: SparkSession, dir: String): Unit = {
     // codegen + the leg's parquet footers
     s.range(1 << 20).selectExpr("sum(id)").collect()
@@ -107,7 +92,6 @@ object BenchScale {
   def main(args: Array[String]): Unit = {
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val bigDir = args.headOption.getOrElse("/root/repo/target/scale10x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // PER-LEG SparkSession isolation (r9): session stage stores key on
     // applicationId, so one shared session carries BOTH legs' stores —
     // at 10× that overflows the storage pool and the big leg's warm
@@ -119,7 +103,7 @@ object BenchScale {
     // per leg gives each leg exactly its own stores — the same
     // apples-to-apples a real per-dataset deployment has — while JIT
     // state (shared JVM) still warms across legs for both.
-    var spark = newSession(cpus)
+    var spark = Sessions.local()
     buildReplica(spark, smallDir, bigDir)
     warm(spark, smallDir)
 
@@ -189,7 +173,7 @@ object BenchScale {
     }
     def resetSession(nextDir: String): Unit = {
       spark.stop()
-      spark = newSession(cpus)
+      spark = Sessions.local()
       warm(spark, nextDir)
     }
     // rerun = min of TWO warm runs: single-sample warm cells on a

@@ -198,23 +198,4 @@ object NNParafac {
     }
     weights
   }
-
-  /** Scale the mass mode back by the preprocessing weights and boost MS1
-    * rows ×1000 (decompose_parafac.py:229-234). Mutates massMode. */
-  def postprocess(
-      massMode: DenseMatrix[Double],
-      weights: Array[Double],
-      ms1Rows: Seq[Int]): DenseMatrix[Double] = {
-    var r = 0
-    while (r < massMode.rows) {
-      var c = 0
-      while (c < massMode.cols) { massMode(r, c) *= weights(r); c += 1 }
-      r += 1
-    }
-    ms1Rows.foreach { r =>
-      var c = 0
-      while (c < massMode.cols) { massMode(r, c) *= 1000.0; c += 1 }
-    }
-    massMode
-  }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import graft.{GraftQuery, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -235,7 +237,10 @@ object Dedup extends QueryPack {
   // vocabulary — so the verify join ships
   // ~8 bytes per token instead of a ~20-char string and intersects
   // longs (measured at the 10× replica: the string-array verify was
-  // 72 s of payload shuffle for 1.25M candidates).
+  // 72 s of payload shuffle for 1.25M candidates). The two set frames
+  // returned are projections of the one persisted `setsNs`: `unpersist`
+  // on a projection is a no-op (uncache matches the cached plan, not a
+  // Project over it), so a release must go through `setsNs` itself.
   private[operators] def ppjoinStagesCached(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
@@ -284,8 +289,14 @@ object Dedup extends QueryPack {
           .persist()
         // one action materializes ranked, setsNs (via the join's build
         // side) and pref; the window stage cache releases after
-        pref.count()
-        setsNs.count()
+        try {
+          pref.count()
+          setsNs.count()
+        } catch { case NonFatal(e) =>
+          pref.unpersist()
+          setsNs.unpersist()
+          throw e
+        }
         (pref, setsNs.select(col("doc_id"), col("nsh")),
           setsNs.select(col("doc_id"), col("tids")))
       } finally ranked.unpersist()

@@ -519,10 +519,10 @@ object GraphOps extends QueryPack {
     // closed form Σ C(|N⁺|, 2) reads every adjacency partition, so it
     // materializes the persist exactly like count() did, and the final
     // plan carries the value as a literal (one fewer crossJoin leg).
-    // PLAN-AUDIT NOTE: because of this, the LazyPlans/Explain dump of
+    // PLAN-AUDIT NOTE: because of this, the LazyPlans/Profile dump of
     // q_graph_triangles shows n_wedges as a LITERAL, not the wedge
     // aggregate — the wedge computation happens HERE, at plan-build
-    // time (this is also why building this plan runs jobs; Explain
+    // time (this is also why building this plan runs jobs; Profile
     // releases the returned caches afterwards)
     val nWedgesVal = adj
       .select(size(col("nb")).cast("long").as("k"))

@@ -84,14 +84,6 @@ object SeqIO {
       .select(col("scanNum").cast("long").as("scan"), col("sequence"),
         col("score").cast("double").as("score"))
 
-  private val blastpCols = Seq("qseqid", "sseqid", "pident", "length",
-    "mismatch", "gapopen", "qstart", "qend", "sstart", "send", "evalue",
-    "bitscore")
-
-  /** blastp -outfmt 6 reader (seqproc.py:96-105). */
-  def readBlastp(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("sep", "\t").csv(path).toDF(blastpCols: _*)
-
   // -------------------------------------------------- digestion + decoys
   /** Tryptic digestion: cleave after K/R except before P (the default
     * ProteaseDigestion the reference uses, seqproc.py:115-119). */

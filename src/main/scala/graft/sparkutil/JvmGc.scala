@@ -1,9 +1,8 @@
 package graft.sparkutil
 
 /** The bench harnesses' shared JVM GC-time probe — one definition for
-  * Bench, BenchScale, and RunOne (each previously carried its own
-  * copy, so a fix — e.g. handling a bean that reports −1 — had three
-  * places to land). */
+  * Bench, BenchScale and Profile, so a fix (e.g. handling a bean that
+  * reports −1) has one place to land. */
 object JvmGc {
   private val beans =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans

@@ -38,10 +38,17 @@ import org.apache.spark.sql.functions._
   * leg materializes the cache, the probe leg reads it — and an evicted
   * cache block recomputes from the exchange's shuffle FILES (partition
   * index fixed), not from a re-sampled exchange, so `__pid` stays a
-  * pure function of the data. AQE never re-splits it either:
-  * `repartitionByRange` with an explicit partition count is exempt
-  * from partition coalescing. Callers must release the returned cache
-  * after their terminal action ([[materializeAndRelease]]).
+  * pure function of the data. AQE may coalesce the range exchange (no
+  * partition count is passed), but coalescing merges only CONTIGUOUS
+  * range partitions, so pid order still follows sort order, and it
+  * happens before the persist stamps the ids. Callers must release the
+  * returned cache after their terminal action ([[materializeAndRelease]]).
+  *
+  * Ceiling: `monotonically_increasing_id` keeps the in-partition row
+  * index in its low 33 bits, so every cached range partition must hold
+  * fewer than 2^33 rows; past that, `__mid >> 33` misreads the pid and
+  * the rank arithmetic is wrong. AQE's advisory partition sizing keeps
+  * partitions orders of magnitude below it.
   */
 object ScalableRank {
 
@@ -108,7 +115,7 @@ object ScalableRank {
       .join(broadcast(offs), Seq("__g", "__pid"))
       .withColumn(rankName,
         col("__off") + (col("__mid") - col("__first")) + lit(1L))
-      .drop("__pid", "__off", "__first", "__mid")
+      .drop("__g", "__pid", "__off", "__first", "__mid")
     (ranked, staged)
   }
 

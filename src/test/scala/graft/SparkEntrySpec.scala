@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Guards on the driver contract itself: the registry must stay
   * internally consistent and the flagship entry must produce rows. */
-class SparkEntrySpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("entry-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SparkEntrySpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("every oracle key names a registered query") {
     val qs = SparkEntry.queries.keySet

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -12,14 +10,7 @@ import org.scalatest.matchers.should.Matchers
   * never touches the ledger. Also pins the store's lifetime: entries
   * are dropped when their session stops.
   */
-class StoreBuildsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[1]").appName("store-builds")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StoreBuildsSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private def spin(ms: Long): Unit = {
     val end = System.nanoTime() + ms * 1000000L
@@ -83,13 +74,15 @@ class StoreBuildsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   }
 
   test("a stopped session's stores are gone") {
-    val app = spark.sparkContext.applicationId
-    StoreBuilds.cached(spark, "x", "spec_stop")(1L)
-    val dir = StoreBuilds.scratchDir(spark, "x", "graft-spec-stop")
-    StoreBuilds.scratchDir(spark, "x", "graft-spec-stop") shouldBe dir
+    spark.stop()
+    val s = Sessions.local(1)
+    val app = s.sparkContext.applicationId
+    StoreBuilds.cached(s, "x", "spec_stop")(1L)
+    val dir = StoreBuilds.scratchDir(s, "x", "graft-spec-stop")
+    StoreBuilds.scratchDir(s, "x", "graft-spec-stop") shouldBe dir
     new java.io.File(dir).isDirectory shouldBe true
     StoreBuilds.entries(app) should be >= 2
-    spark.stop()
+    s.stop()
     StoreBuilds.entries(app) shouldBe 0
   }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,11 +20,8 @@ class GraftExtensionsSpec extends AnyFunSuite with Matchers {
   test("extensions apply on a fresh context: function + optimizer rule") {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[1]").appName("ext-spec")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s2 = Sessions.local(overrides =
+      Map("spark.sql.extensions" -> classOf[GraftExtensions].getName))
     try {
       import s2.implicits._
       val c = Seq((Array(1.0, 2.0), Array(1.0, 2.0))).toDF("a", "b")

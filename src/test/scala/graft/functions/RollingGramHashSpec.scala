@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** `graft_roll64` contract:
   *   - the ROLLED hash at every position equals the direct polynomial
@@ -17,15 +17,7 @@ import org.scalatest.BeforeAndAfterAll
   *     discipline for session-registered SQL).
   */
 class RollingGramHashSpec
-    extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("roll64-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    extends AnyFunSuite with Matchers with SparkSuite {
 
   private def roll(tokens: Seq[String], l: Int): Seq[Long] = {
     graft.functions.GraftFunctions.register(spark)

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -16,15 +15,7 @@ import org.scalatest.matchers.should.Matchers
   * literal fold exercises eval.
   */
 class SortedIntersectCountSpec
-    extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("ixcount-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    extends AnyFunSuite with Matchers with SparkSuite {
 
   private def check(pairs: Seq[(Seq[Long], Seq[Long])]): Unit = {
     GraftFunctions.register(spark)

@@ -1,24 +1,15 @@
 package graft.ms
 
+import graft.SparkSuite
 import graft.ms.ops.Decomposer
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** skip_completed resume semantics (decompose_parafac.py:74-76): a
   * partial re-run must decompose ONLY missing (slice, F) pairs. The
   * probe is the append-mode store itself — if the anti-join failed to
   * skip completed pairs, re-running would append duplicates. */
-class DecomposerSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("decomposer-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DecomposerSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   /** A small non-trivial synthetic tensor (3 samples × 5 cycles × 4 mz). */
   private def tensor(key: String, rt: Int): SliceTensor = {

@@ -1,24 +1,15 @@
 package graft.ms
 
+import graft.SparkSuite
 import graft.ms.ops.Indexing
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Port of the reference's exact-table golden test `test_index_all_spectra`
   * (models.py:206-225): the model grid is swath-major → rt_window → ncomp
   * with model_id = row ordinal; the spectrum index explodes components
   * with a globally ordered scan ordinal. */
-class IndexingSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("indexing-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class IndexingSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("spectrum index matches the reference's expected table exactly") {
     import spark.implicits._

@@ -1,24 +1,15 @@
 package graft.ms
 
+import graft.SparkSuite
 import graft.ms.ops.{Indexing, TensorizeOp}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Snakemake-parity resume for the tensorize and peak-count stages: a
   * partial re-run must recompute ONLY the slices/models missing from
   * the stage store. As in DecomposerSpec, the probe is the append-mode
   * store itself — a failed skip would append duplicate rows. */
-class MsResumeSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("ms-resume-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MsResumeSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   /** One valid slice of peaks per rt_window: 2 samples × 6 cycles, two
     * m/z labels per MS level (all labels covered in every cycle, so the

@@ -1,11 +1,10 @@
 package graft.ms
 
+import graft.SparkSuite
 import graft.ms.linalg.{GaussianImpute, NNParafac, NumpyRandom}
 import graft.ms.ops.Decomposer
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Cross-check of the DISTRIBUTED NN-PARAFAC against an independent
   * sequential implementation, on REAL slice tensors.
@@ -31,15 +30,7 @@ import org.scalatest.BeforeAndAfterAll
   * sides run double precision over the same trajectory.
   */
 class ParafacCrossCheckSpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("parafac-crosscheck")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    with SparkSuite {
 
   // sf0.01: 100 non-trivial ~3×60×36 slices (sf0.001 yields only one
   // degenerate 1×5×1 tensor — below the trivial-tensor guard)

@@ -1,26 +1,17 @@
 package graft.ms
 
+import graft.SparkSuite
 import graft.ms.ops.WindowOps
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** The slice sink is the engine's storage contract at scale: Hive-style
   * (swath_key, rt_window) partitions so downstream per-slice stages read
   * exactly one directory per slice via partition pruning (the scan never
   * touches other slices' files). */
-class WriteSlicesSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("slices-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class WriteSlicesSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("partitioned write round-trips and prunes on read") {
     import spark.implicits._

@@ -2,11 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Golden semantics for q_sim_binary_hamming on hand-built 64-dim sign
   * patterns that exercise BOTH packed words and every distance regime:
@@ -15,15 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * in FP by construction (±1 coordinates → integer dots, norm² = 64).
   */
 class BinaryHammingSpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("binary-hamming-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    with SparkSuite {
 
   test("sign packing spans both words; rerank orders by exact cosine") {
     import spark.implicits._

@@ -1,23 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Golden check: the distributed BPE trainer must learn the same merge
   * table as an independent sequential implementation of the Sennrich
   * algorithm (count pairs over the word-frequency vocabulary, take the
   * (count desc, left, right) argmax, merge, repeat). */
-class BpeTrainerSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("bpe-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BpeTrainerSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   /** Sequential reference: deliberately written in the most direct way
     * possible (nested maps, full recount each rank). */

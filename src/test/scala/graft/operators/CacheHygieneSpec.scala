@@ -1,27 +1,17 @@
 package graft.operators
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Registry queries that persist intermediates must release them before
   * returning: a pipeline invoking a query repeatedly (as
   * q_sim_ivfpq_recall composes q_sim_ivfpq) must not accumulate
   * executor storage across invocations. Only the session stage stores
   * (graft.StoreBuilds) stay persisted. */
-class CacheHygieneSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class CacheHygieneSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("cache-hygiene")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("q_sim_ivfpq leaves no persisted RDDs behind") {
     assume(new java.io.File(s"$sf/embeddings.parquet").exists)

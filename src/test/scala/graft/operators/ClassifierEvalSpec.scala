@@ -1,11 +1,9 @@
 package graft.operators
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Independent checks for the threshold-free classifier evals.
   *
@@ -18,21 +16,11 @@ import org.scalatest.BeforeAndAfterAll
   * per-bin positive rates against the same naive pair set.
   */
 class ClassifierEvalSpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
+    with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData =
     new java.io.File(s"$sf/documents.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("classifier-eval-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   /** Naive recomputation of the held-out (y, en_score, total_score)
     * rows: same 80/20 md5 split and token counting as the classifier

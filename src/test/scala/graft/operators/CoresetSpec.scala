@@ -1,10 +1,8 @@
 package graft.operators
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** q_sim_coreset vs a plain-Scala sequential farthest-point traversal:
   * identical pick order and radius curve on a toy corpus (including
@@ -12,16 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * remain), correct truncation when the list has fewer than k points,
   * and the monotone-nonincreasing radius property on real testdata.
   */
-class CoresetSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("coreset-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CoresetSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private def writeEmb(rows: Seq[(Long, Array[Float], Int)]): String = {
     import spark.implicits._

@@ -1,12 +1,10 @@
 package graft.operators
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Structural checks for the curation/telemetry operators added in
   * round 5: the two decomposed-window shapes are proven equal to their
@@ -15,20 +13,10 @@ import org.scalatest.BeforeAndAfterAll
   * regression fails fast without DuckDB), and each op's internal
   * invariants hold on real testdata.
   */
-class CurationOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class CurationOpsSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sf/events.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("curation-ops-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("late_data bucketed prefix-max equals the naive global window") {
     assume(haveData)

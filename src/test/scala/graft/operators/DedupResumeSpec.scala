@@ -1,25 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Snakemake-parity resume for the band-index store: a partial store +
   * a full-corpus call must band ONLY the missing documents and append —
   * the same contract MsResumeSpec pins for the ms chain's tensor/model/
   * count stores, here for the dedup signature index (the artifact a
   * 100 TB ingestion pipeline materializes once per batch). */
-class DedupResumeSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("dedup-resume")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DedupResumeSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private def docs(n: Int) = {
     import spark.implicits._

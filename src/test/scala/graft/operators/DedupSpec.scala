@@ -1,24 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Unit coverage for the Jaccard stop-shingle removal (df cap): hot
   * shingles must vanish from the Jaccard space entirely (the 100 TB
   * quadratic guard), while pairs sharing sub-cap shingles score over
   * the capped sets. */
-class DedupSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("dedup-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DedupSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private def shingleDf(rows: (Long, String)*) = {
     import spark.implicits._

@@ -1,10 +1,8 @@
 package graft.operators
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Parallelism invariance: the same query must return IDENTICAL rows at
   * different shuffle-partition counts. This is the local stand-in for
@@ -12,19 +10,10 @@ import org.scalatest.BeforeAndAfterAll
   * failure mode it hunts is partition-order dependence (an unsorted
   * collect_list, a row_number over an under-specified order, an
   * FP accumulation the output rounding doesn't absorb). */
-class DeterminismSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class DeterminismSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sf/lineitem.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("determinism-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   // every output shape class: rounded FP aggregates, md5-integer ops,
   // window ordinals, top-k with tie-breaks, collected arrays

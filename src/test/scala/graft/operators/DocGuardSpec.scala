@@ -1,10 +1,8 @@
 package graft.operators
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** docs/PLANS.md drift guard — the doc-vs-code disease three
   * consecutive judge rounds flagged (r8: two sections still said
@@ -23,26 +21,10 @@ import org.scalatest.BeforeAndAfterAll
   *  3. named static facts (constants, output columns, spec names) the
   *     sections lean on must exist in those sections verbatim.
   */
-class DocGuardSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class DocGuardSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sf/lineitem.parquet").exists
-
-  private var sparkUsed = false
-  private lazy val spark: SparkSession = {
-    sparkUsed = true
-    SparkSession.builder()
-      .master("local[4]").appName("doc-guard")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-  }
-
-  // don't force the lazy session just to stop it: when the plan test
-  // is skipped (no testdata) the doc-only tests shouldn't pay — or
-  // fail on — a Spark startup in teardown
-  override def afterAll(): Unit = if (sparkUsed) spark.stop()
 
   private lazy val doc: String = {
     val p = java.nio.file.Paths.get("docs/PLANS.md")

@@ -2,30 +2,19 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Degenerate-input robustness: every operator must run (and return an
   * empty or well-defined result) against ZERO-ROW tables — at 100 TB a
   * selective filter, a new tenant, or an empty partition produces
   * exactly this shape, and a driver-side `.head()` on an empty
   * aggregate is the classic way such jobs die at 3am. */
-class EmptyInputSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class EmptyInputSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val src = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$src/lineitem.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("empty-input-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private lazy val emptyDir: String = {
     val dir = Files.createTempDirectory("graft-empty").toString

@@ -2,11 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** q_dedup_exact_substr on a controlled corpus where the ≥50-token
   * repeat structure is known by construction — pins the claims the
@@ -23,15 +21,7 @@ import org.scalatest.BeforeAndAfterAll
   * adversarial shapes the synthetic corpus may not contain.)
   */
 class ExactSubstrSpec
-    extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("exact-substr-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    extends AnyFunSuite with Matchers with SparkSuite {
 
   // distinct vocab everywhere so no ACCIDENTAL 50-gram repeats exist
   private def toks(prefix: String, n: Int): Seq[String] =

@@ -2,11 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Randomized cross-checks for the graph pack: encode seeded random
   * graphs as 2-item orders (so the co-purchase derivation reproduces
@@ -14,15 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * against brute-force references computed in plain Scala. Catches the
   * class of bug a single golden graph can miss (orientation ties,
   * dangling nodes, unreachable components). */
-class GraphOpsProps extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("graph-props")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraphOpsProps extends AnyFunSuite with Matchers with SparkSuite {
 
   /** Random undirected simple graph on node ids 0..n-1 (NOT all
     * multiples of 97 — seeds for BFS are the 0-node only, plus any

@@ -2,24 +2,14 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Golden checks for the graph pack on hand-built graphs where the
   * answer is known by inspection (the DuckDB oracle checks sf0.01;
   * these pin the algorithms themselves on adversarially tiny inputs). */
-class GraphOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("graph-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraphOpsSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   /** Write a minimal star-schema dir: two nations trading symmetrically
     * (edge 0→1 and 1→0, equal weight) and four orders whose part sets

@@ -2,11 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** The Hilbert layout's correctness rests on the index FORMULA, so
   * this spec proves the defining curve properties of the exact
@@ -16,15 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   * property Morton codes lack, and the reason Hilbert file ranges
   * cover tighter rectangles). A controlled fixture then checks the
   * registry query end-to-end against hand-derived file counts. */
-class HilbertSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("hilbert-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HilbertSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   /** Plain-Scala mirror of the unrolled stages in q_scale_hilbert. */
   private def xy2d(x0: Int, y0: Int): Int = {

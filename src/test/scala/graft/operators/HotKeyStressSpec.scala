@@ -1,11 +1,9 @@
 package graft.operators
 
-import graft.ShuffleMeter
-import org.apache.spark.sql.SparkSession
+import graft.{ShuffleMeter, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Hot-key stress: drive the two inverted-index pair kernels with a
   * single key at 100× the df cap and prove — as a failing test, not
@@ -15,15 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * the 100 TB claim for `Dedup.pairCounts` and `Multimodal.framePairs`
   * in executable form.
   */
-class HotKeyStressSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("hotkey-stress")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HotKeyStressSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   // one shingle/fingerprint shared by 100×cap docs + two rare pairs
   private val Cap = 20

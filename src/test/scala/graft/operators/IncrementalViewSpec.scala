@@ -3,11 +3,9 @@ package graft.operators
 import java.nio.file.Files
 import java.sql.Date
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Golden semantics for q_scale_mv_maintain: one order each side of the
   * 1997-01-01 base/delta cut, hand-computed on the 1e4 revenue grid.
@@ -16,16 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   * values small enough to check by hand.
   */
 class IncrementalViewSpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("mv-maintain-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    with SparkSuite {
 
   test("base + delta partials merge to the hand-computed view") {
     import spark.implicits._

@@ -2,11 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Golden semantics for q_sim_kmeans on planted clusters: 4 axis-aligned
   * groups of two vectors each (magnitudes 1.0 and 0.8 along a private
@@ -18,15 +16,7 @@ import org.scalatest.BeforeAndAfterAll
   *   inertia    = 2 · 100000²      = 20 000 000 000
   *   cent_sum   = 900000 (single non-zero coordinate)
   */
-class KMeansSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("kmeans-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KMeansSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("planted axis clusters: sizes, integer inertia, centroid checksum") {
     import spark.implicits._

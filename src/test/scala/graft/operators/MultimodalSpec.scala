@@ -1,21 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Unit coverage for the multimodal batch kernel outside the registry's
   * rows-only check: feature math on payloads with known statistics. */
-class MultimodalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("mm-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MultimodalSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("features of known payloads via the registry kernel") {
     assume(new java.io.File("/root/testdata/sf0.001/documents.parquet").exists)

@@ -2,11 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Properties of the NN-descent round beyond the sf0.01 oracle.
   *
@@ -20,15 +18,7 @@ import org.scalatest.BeforeAndAfterAll
   * themselves, hence b survives the refine cut. A regression that
   * breaks the candidate union, the tie-breaks, or the rescore metric
   * breaks this invariant before any oracle diff would localize it. */
-class NnDescentSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("nn-descent-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class NnDescentSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private def writeCorpus(seed: Long, n: Int, dims: Int, labels: Int): String = {
     import spark.implicits._

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** In-flight observability: `Dataset.observe` attaches data-quality
   * counters to the MAIN query (no second scan) — the production way to
@@ -12,18 +12,10 @@ import org.scalatest.BeforeAndAfterAll
   * constraint-gate query (q_scale_constraints) is the standalone audit
   * pass; this pins that the same metrics can ride along any query for
   * free and agree with the direct aggregate. */
-class ObserveSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class ObserveSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sf/documents.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("observe-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("observed metrics ride the main query and match a direct agg") {
     assume(haveData)

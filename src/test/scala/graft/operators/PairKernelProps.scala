@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
 
@@ -15,11 +15,7 @@ object PairKernelProps extends Properties("operators.pair_kernels") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("pair-kernel-props")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local()
 
   // (doc_id, key) postings: ≤ 30 rows over ≤ 6 keys and ≤ 12 docs
   private val postingsGen: Gen[List[(Long, Long)]] =

@@ -1,10 +1,8 @@
 package graft.operators
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Semantic check for q_sim_pca: the integer power iteration must
   * RECOVER a planted dominant axis, not just match its own oracle.
@@ -14,16 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * dominance. Also pins the L∞ normalization contract (max |loading| =
   * 1000, positive at the tie-broken index) and the empty-input shape.
   */
-class PcaSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("pca-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PcaSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private def writeEmb(rows: Seq[(Long, Array[Float], Int)]): String = {
     import spark.implicits._

@@ -1,11 +1,10 @@
 package graft.operators
 
-import graft.{SparkEntry, Tables}
+import graft.{SparkEntry, SparkSuite, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Plan-shape regression guards: the properties that make these
   * operators survive a 100 TB cluster are PLAN properties (pruned
@@ -13,17 +12,10 @@ import org.scalatest.BeforeAndAfterAll
   * so they are asserted here against the compiled physical plans — a
   * quiet regression (e.g. a lost projection pushdown) fails CI even
   * though results stay correct. */
-class PlanGuardSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class PlanGuardSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sf/lineitem.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("plan-guard")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
@@ -664,5 +656,4 @@ class PlanGuardSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     p should not include "BroadcastHashJoin"
   }
 
-  override def afterAll(): Unit = spark.stop()
 }

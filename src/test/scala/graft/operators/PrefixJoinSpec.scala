@@ -1,10 +1,8 @@
 package graft.operators
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Completeness proof for q_dedup_ppjoin's prefix filter: on corpora
   * built to stress the bound (near-dup clusters straddling the τ = 0.5
@@ -16,16 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   * semantics mirrored from the kernel: split(" ", -1), 3-gram windows,
   * distinct).
   */
-class PrefixJoinSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("prefix-join-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PrefixJoinSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private def shingleSet(text: String): Set[String] = {
     val ws = text.split(" ", -1)

@@ -1,11 +1,10 @@
 package graft.operators
 
+import graft.SparkSuite
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Task-retry safety: on a 1000-executor cluster tasks FAIL —
   * preemption, OOM-killed containers, flaky disks — and Spark
@@ -13,19 +12,14 @@ import org.scalatest.BeforeAndAfterAll
   * side-effect-free per partition. This spec injects a first-attempt
   * failure into a partition of the minhash signature kernel's input
   * and asserts the query still completes with the identical result. */
-class RetrySafetySpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class RetrySafetySpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sf/documents.parquet").exists
 
   // local[4, 3]: 4 threads, 3 task-failure budget — retries enabled
-  private lazy val spark = SparkSession.builder()
-    .master("local[4, 3]").appName("retry-safety")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sessionOverrides =
+    Map("spark.master" -> "local[4, 3]")
 
   test("minhash banding survives a task failure with identical output") {
     assume(haveData)

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Runtime Bloom-filter injection: when a selective dimension filters
   * a shuffle join, Catalyst's InjectRuntimeFilter should build a Bloom
@@ -13,25 +12,19 @@ import org.scalatest.BeforeAndAfterAll
   * the whole fact table and shuffling the ~matching rows. This spec
   * pins that the optimization engages on our join shapes and that it
   * does not change results. */
-class RuntimeFilterSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class RuntimeFilterSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sf/lineitem.parquet").exists
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("runtime-filter")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // engage the machinery at toy scale: no broadcast (forces the
-    // shuffle join the filter exists for), no size floors
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "1GB")
-    .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // engage the machinery at toy scale: no broadcast (forces the
+  // shuffle join the filter exists for), no size floors
+  override protected def sessionOverrides = Map(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "1GB",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+      -> "0")
 
   test("a selective dim filter injects a Bloom probe on the fact side") {
     assume(haveData)

@@ -2,27 +2,17 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Golden semantics for q_dedup_semantic on planted vectors: a cluster's
   * lowest-id member is always kept, a near-parallel higher-id cluster-mate
   * (cos ≥ 0.4) is dropped, and a cluster-mate below the threshold
   * survives. Clusters are the nearest integer-grid label centroid, so the
   * test also pins the assignment rule (not just the scoring). */
-class SemanticDedupSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("semantic-dedup-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SemanticDedupSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("keeps cluster minima and sub-threshold mates, drops near-dups") {
     import spark.implicits._

@@ -1,29 +1,18 @@
 package graft.operators
 
-import graft.{ShuffleMeter, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{ShuffleMeter, SparkEntry, SparkSuite, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Shuffle-volume guards: print thresholds on the claims COVERAGE.md
   * makes in prose. Run at sf0.01 where the text corpus is ~hundreds of
   * KB — an operator that accidentally shuffles document bodies blows
   * straight through these bounds. */
-class ShuffleVolumeSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class ShuffleVolumeSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.01"
   private def haveData = new java.io.File(s"$sf/documents.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("shuffle-volume")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def shuffleWrite(q: String): Long =
     ShuffleMeter.measure(spark) {

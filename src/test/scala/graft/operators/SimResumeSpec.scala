@@ -1,25 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Resume contract of the durable IVF-assignment store
   * ([[Similarity.ivfAssignResumable]]) — the vector-index twin of
   * DedupResumeSpec: increments converge on the from-scratch assignment,
   * indexed vectors are never re-assigned, and a vector duplicated
   * WITHIN one batch is assigned exactly once. */
-class SimResumeSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("sim-resume")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimResumeSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   // two well-separated clusters: label 0 near (0,0,0,0), label 1 near
   // (10,10,10,10); vector i leans to cluster (i % 2)

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** AQE skew-join demonstration: a 95%-hot-key fact joined without
   * broadcast must trigger AQE's runtime skew split (the complement to
@@ -12,20 +11,14 @@ import org.scalatest.BeforeAndAfterAll
   * plan, AQE catches unknown skew at runtime; a 100 TB pipeline needs
   * both). Asserts the executed plan actually took the skew path AND
   * that the result is identical to the broadcast (skew-immune) plan. */
-class SkewJoinSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class SkewJoinSpec extends AnyFunSuite with Matchers with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("skew-join")
-    .config("spark.sql.shuffle.partitions", 8)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    // force the skew machinery to engage at toy scale
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.2")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // force the skew machinery to engage at toy scale
+  override protected def sessionOverrides = Map(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB")
 
   test("AQE splits the hot partition and preserves the join result") {
     import spark.implicits._

@@ -1,11 +1,9 @@
 package graft.operators
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Invariants for the sharding/split/batching operators: each is
   * cross-checked against an independent JVM-side recomputation
@@ -13,20 +11,10 @@ import org.scalatest.BeforeAndAfterAll
   * expressions), so an expression-level regression (hex-parse width,
   * argmax tie order, bucket boundary) fails here without DuckDB.
   */
-class SplitShardingSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class SplitShardingSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sf/documents.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("split-sharding-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   /** First 8 hex chars of md5(s) as an unsigned Long — the repo's
     * md5-integer idiom, recomputed off the Spark expression stack. */

@@ -2,11 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SparkEntry, SparkSuite}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Golden semantics for q_text_tfidf on a 3-document corpus where every
   * score is hand-computable on the integer idf grid
@@ -15,15 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   *   doc 2 "banana cherry":        tie at 1.5e6 → lexicographic order
   *   doc 3 "cherry cherry cherry durian": cherry 3·1.5e6 beats durian 3e6
   */
-class TfidfSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("tfidf-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TfidfSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("top terms, scaled integer scores, and the lexicographic tie-break") {
     import spark.implicits._

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** The unigram tokenizer's sequential kernel, cross-checked against
   * exhaustive enumeration: the Viterbi DP must return a segmentation
@@ -15,15 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   * proves the kernel's optimality claim, which the oracle (same
   * algorithm, different engine) cannot. */
 class UnigramTrainerSpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("unigram-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    with SparkSuite {
 
   private def cost(f: Long): Long =
     40L - (java.lang.Long.toBinaryString(math.max(f, 1L)).length - 1)

@@ -1,29 +1,20 @@
 package graft.pipeline
 
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** End-to-end smoke over the reference's toy experiment (SURVEY §7.2):
   * 2 mzML scans → adjust → slice → tensorize → PARAFAC → select →
   * mzXML export. F range and iterations are reduced vs the reference
   * toy config (F∈[10,14], 5000 iters) to keep CI fast — the numerics
   * at full settings are covered by NNParafacSpec's golden test. */
-class CandiaPipelineSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class CandiaPipelineSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val scanDir = "/root/reference/test/test_experiment/samples/scans_mzml"
   private val files = Seq(s"$scanDir/scan1.mzML", s"$scanDir/scan2.mzML")
   private def haveToyData = new java.io.File(files.head).isFile
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("candia-e2e")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("slice checkpoint round-trips the peak table losslessly") {
     assume(haveToyData)

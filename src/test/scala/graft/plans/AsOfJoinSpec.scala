@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** AsOfJoinExec equivalence: the physical operator must return exactly
   * what the relational formulation (left join + per-left-row argmax
@@ -13,15 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * keys with no right rows, null times/keys, time exactly equal) and
   * on real data. Also pins the plan: an AsOfJoinExec node, no shuffle
   * of the probe side, no sort-merge join. */
-class AsOfJoinSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("asof-spec")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AsOfJoinSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   /** Reference implementation: windowed argmax over a range left join. */
   private def relational(l: DataFrame, r: DataFrame): Seq[Seq[String]] = {

@@ -1,30 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** IntervalLookupJoinRule: the point-in-interval join against a literal
   * interval table must plan as a join-free binary-search projection,
   * produce exactly the join's rows, and leave every non-matching shape
   * untouched. */
 class IntervalJoinRuleSpec extends AnyFunSuite
-    with Matchers with BeforeAndAfterAll {
+    with Matchers with SparkSuite {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("interval-rule-spec")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    IntervalLookupJoinRule.install(s)
-    s
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    IntervalLookupJoinRule.install(spark)
   }
-
-  override def afterAll(): Unit = spark.stop()
 
   import org.apache.spark.sql.DataFrame
 

@@ -1,10 +1,10 @@
 package graft.plans
 
+import graft.SparkSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** IntervalJoinExec must be indistinguishable from the join it replaces.
   * Every case runs the SAME range join twice — in a session with the
@@ -17,15 +17,7 @@ import org.scalatest.BeforeAndAfterAll
   * strict/inclusive bound combos.
   */
 class IntervalJoinStrategySpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("interval-strategy-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    with SparkSuite {
 
   private def facts(s: SparkSession): DataFrame = {
     import s.implicits._

@@ -1,31 +1,22 @@
 package graft.sources
 
+import graft.SparkSuite
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Source/sink format parity beyond parquet: the same relation must
   * round-trip byte-exactly through ORC, JSON, and CSV (with explicit
   * schemas — inference is a correctness hazard at scale), and a corrupt
   * JSON landing file must degrade row-by-row under PERMISSIVE mode
   * instead of failing the scan — the data-lake ingestion contract. */
-class FormatsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class FormatsSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def haveData = new java.io.File(s"$sf/nation.parquet").exists
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("formats-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def nation = spark.read.parquet(s"$sf/nation.parquet")
     .orderBy("n_nationkey")

@@ -1,28 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Golden tests against the reference's toy experiment
   * (/root/reference/test/test_experiment/samples/scans_mzml/ — 2 files ×
   * 114 spectra, RT 1000–1050 s, SWATHs starting ≈623 & ≈639; see
   * SURVEY.md §5.5). Read-only use of the reference test data as parser
   * input. */
-class MzMLSourceSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class MzMLSourceSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val scanDir = "/root/reference/test/test_experiment/samples/scans_mzml"
   private val files = Seq(s"$scanDir/scan1.mzML", s"$scanDir/scan2.mzML")
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("mzml-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def haveToyData = new java.io.File(files.head).isFile
 

@@ -1,13 +1,12 @@
 package graft.sources
 
+import graft.SparkSuite
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Streaming mzML ingestion parity: the same toy files produce the same
   * per-(sample, level) peak counts and intensity sums whether read with
@@ -15,20 +14,11 @@ import org.scalatest.BeforeAndAfterAll
   * file landing AFTER the first micro-batch is picked up incrementally
   * by the next one, which is the property that makes the source a
   * continuous-ingestion path rather than a batch re-list. */
-class MzMLStreamSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
+class MzMLStreamSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val scanDir = "/root/reference/test/test_experiment/samples/scans_mzml"
   private val files = Seq(s"$scanDir/scan1.mzML", s"$scanDir/scan2.mzML")
   private def haveToyData = new java.io.File(files.head).isFile
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("mzml-stream-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def summarize(ds: org.apache.spark.sql.Dataset[RawPeak]) =
     ds.groupBy(col("file"), col("level"))

@@ -1,21 +1,12 @@
 package graft.sources
 
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Golden-file coverage for the stage-9/10 result-gather readers. */
-class PsmGatherSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("psm-gather-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PsmGatherSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private def write(path: String, content: String): Unit = {
     Files.createDirectories(Paths.get(path).getParent)

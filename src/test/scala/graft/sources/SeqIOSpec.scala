@@ -1,20 +1,11 @@
 package graft.sources
 
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
-class SeqIOSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("seqio-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SeqIOSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("FASTA round-trip and entry count") {
     val entries = Seq(("scan1", "PEPTIDEK"), ("scan2", "MKRSEQ"))

@@ -1,9 +1,8 @@
 package graft.sparkutil
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -15,15 +14,11 @@ import org.scalatest.matchers.should.Matchers
   * sub-bucket-count frames, duplicate sort keys (tie-broken by id),
   * multiple groups, and more shuffle partitions than rows. */
 class ScalableRankSpec extends AnyFunSuite with Matchers
-    with BeforeAndAfterAll {
+    with SparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("scalable-rank-spec")
-    .config("spark.sql.shuffle.partitions", 7)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // more shuffle partitions than the small frames have rows
+  override protected def sessionOverrides =
+    Map("spark.sql.shuffle.partitions" -> "7")
 
   /** Deterministic pseudo-random frame: id unique, k intentionally
     * collision-heavy so ties span range-partition boundaries. */
@@ -38,6 +33,8 @@ class ScalableRankSpec extends AnyFunSuite with Matchers
     val df = frame(n, groups)
     val (ranked, staged) = ScalableRank.withGlobalRank(
       df, col("g"), Seq(col("k").desc, col("id")), "r", "tot")
+    // no helper column leaks into the result
+    ranked.columns should contain theSameElementsAs (df.columns :+ "r" :+ "tot")
     val expected = df
       .withColumn("r_w", row_number().over(Window.partitionBy("g")
         .orderBy(col("k").desc, col("id"))).cast("long"))

@@ -1,11 +1,11 @@
 package graft.streaming
 
+import graft.SparkSuite
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** The registry query exercises the single-batch replay (oracle-checked);
   * this spec drives the streaming MinHash dedup across MULTIPLE
@@ -13,15 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * carry: a document arriving in a LATER batch must be flagged against
   * the canonical that claimed its band keys in an earlier batch —
   * first-arrival-wins, even when the late arrival has a smaller id. */
-class DocStreamsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("doc-stream-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DocStreamsSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("band-key state carries across micro-batches, first arrival wins") {
     import spark.implicits._

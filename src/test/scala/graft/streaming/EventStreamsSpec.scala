@@ -1,24 +1,16 @@
 package graft.streaming
 
+import graft.SparkSuite
 import java.nio.file.Files
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** The registry queries exercise the single-batch path; this spec drives
   * the sessionizer across MULTIPLE micro-batches (maxFilesPerTrigger=1)
   * to prove the GroupState carry: an open session must continue across a
   * batch boundary, a >30-min gap must still split. */
-class EventStreamsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("stream-spec")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EventStreamsSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   private val minNs = 60L * 1000000000L
 

@@ -1,13 +1,12 @@
 package graft.streaming
 
+import graft.SparkSuite
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.BeforeAndAfterAll
 
 /** Checkpoint restart semantics: a streaming pipeline that stops and
   * restarts against the same checkpoint must process each input file
@@ -16,15 +15,7 @@ import org.scalatest.BeforeAndAfterAll
   * landing-directory ingestion pattern (q_ms streaming, event streams)
   * safe to operate: crashes and redeploys are the NORMAL case at
   * 100 TB/day. */
-class StreamRestartSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("stream-restart")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamRestartSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("restart from checkpoint processes new files exactly once") {
     import spark.implicits._
