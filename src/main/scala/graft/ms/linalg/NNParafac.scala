@@ -1,6 +1,7 @@
 package graft.ms.linalg
 
-import breeze.linalg.{DenseMatrix, sum}
+import breeze.linalg.DenseMatrix
+import dev.ludovic.netlib.blas.BLAS
 
 /** Non-negative PARAFAC (CANDECOMP) via multiplicative-update ALS.
   *
@@ -22,6 +23,23 @@ import breeze.linalg.{DenseMatrix, sum}
   * tolerance, matching the reference's own cross-machine expectations,
   * decompose_parafac.py:561-563).
   *
+  * Workspace: each decomposition allocates its buffers once (the
+  * Khatri-Rao product, numerator, denominator, V and one Gram matrix per
+  * factor) and every iteration writes into them through
+  * `dev.ludovic.netlib.blas.BLAS.dgemm`, with the arguments Breeze passes
+  * for the same products. Each factor's Gram matrix FₑᵀFₑ is recomputed
+  * once, right after that factor changes, and feeds both V and the error.
+  *
+  * Bit-identity contract: every product is the dgemm call Breeze makes
+  * for it and every element-wise step keeps Breeze's operation order, so
+  * factors, error and iteration counts are bit-identical to the same
+  * algorithm written over Breeze temporaries (pinned by the bit-exact
+  * goldens in NNParafacSpec). A change that reorders the math must come
+  * as an opt-in mode judged by planted-factor recovery, never by
+  * loosening those goldens. The bits depend on the netlib BLAS backend
+  * selected at run time (pure Java unless native BLAS or
+  * jdk.incubator.vector is present).
+  *
   * Scale: one decomposition is a single-node kernel by design — the
   * parallelism axis is (slice × F) fan-out across Spark tasks (the
   * reference fanned the same unit out across GPU processes,
@@ -36,34 +54,35 @@ object NNParafac {
 
   val Epsilon = 1e-11
 
-  /** Khatri-Rao (column-wise Kronecker) of A (I×F) and B (J×F): (I·J)×F,
+  private val blas = BLAS.getInstance()
+
+  /** Khatri-Rao (column-wise Kronecker) of A (I×F) and B (J×F), written
+    * column-major into `out` as an (I·J)×F matrix:
     * row i*J+j = A(i,:) ⊙ B(j,:). */
-  def khatriRao(a: DenseMatrix[Double], b: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val f = a.cols
-    require(b.cols == f)
-    val out = DenseMatrix.zeros[Double](a.rows * b.rows, f)
-    var i = 0
-    while (i < a.rows) {
-      var j = 0
-      while (j < b.rows) {
-        val r = i * b.rows + j
-        var c = 0
-        while (c < f) { out(r, c) = a(i, c) * b(j, c); c += 1 }
-        j += 1
+  private[ms] def khatriRao(
+      a: DenseMatrix[Double], b: DenseMatrix[Double], out: Array[Double]): Unit = {
+    val (ni, nj, f) = (a.rows, b.rows, a.cols)
+    require(b.cols == f && out.length >= ni * nj * f)
+    val (ad, bd) = (a.data, b.data)
+    var c = 0
+    while (c < f) {
+      var i = 0
+      while (i < ni) {
+        val aic = ad(c * ni + i)
+        val base = (c * ni + i) * nj
+        var j = 0
+        while (j < nj) { out(base + j) = aic * bd(c * nj + j); j += 1 }
+        i += 1
       }
-      i += 1
+      c += 1
     }
-    out
   }
 
   /** Mode-m unfolding of a row-major (S,T,M) tensor, matching
     * reshape(moveaxis(X, m, 0), (dims(m), -1)) in C order. */
   def unfold(x: Array[Double], s: Int, t: Int, m: Int, mode: Int): DenseMatrix[Double] = {
-    val out = mode match {
-      case 0 => DenseMatrix.zeros[Double](s, t * m)
-      case 1 => DenseMatrix.zeros[Double](t, s * m)
-      case 2 => DenseMatrix.zeros[Double](m, s * t)
-    }
+    val out = DenseMatrix.zeros[Double](Array(s, t, m)(mode), Array(t * m, s * m, s * t)(mode))
+    val d = out.data
     var is = 0
     while (is < s) {
       var it = 0
@@ -71,12 +90,13 @@ object NNParafac {
         var im = 0
         val base = (is * t + it) * m
         while (im < m) {
-          val v = x(base + im)
-          mode match {
-            case 0 => out(is, it * m + im) = v
-            case 1 => out(it, is * m + im) = v
-            case 2 => out(im, is * t + it) = v
+          // column-major: (row, col) lives at col * rows + row
+          val at = mode match {
+            case 0 => (it * m + im) * s + is
+            case 1 => (is * m + im) * t + it
+            case 2 => (is * t + it) * m + im
           }
+          d(at) = x(base + im)
           im += 1
         }
         it += 1
@@ -86,18 +106,97 @@ object NNParafac {
     out
   }
 
-  private def clipInPlace(mtx: DenseMatrix[Double], lo: Double): Unit = {
-    val d = mtx.data
-    var i = 0
-    while (i < d.length) { if (d(i) < lo) d(i) = lo; i += 1 }
-  }
-
   private def frobenius(mtx: DenseMatrix[Double]): Double = {
     val d = mtx.data
     var acc = 0.0
     var i = 0
     while (i < d.length) { acc += d(i) * d(i); i += 1 }
     math.sqrt(acc)
+  }
+
+  /** The buffers of one decomposition, allocated once and reused by every
+    * iteration: the Khatri-Rao product (sized for the largest mode), the
+    * MTTKRP numerator and the denominator (sized for the largest factor),
+    * V, and the Gram matrix FₑᵀFₑ of each factor. */
+  private final class Workspace(dims: Array[Int], rank: Int) {
+    private val maxDim = dims.max
+    val kr = new Array[Double](dims.product / dims.min * rank)
+    val num = new Array[Double](maxDim * rank)
+    val den = new Array[Double](maxDim * rank)
+    val v = new Array[Double](rank * rank)
+    val grams: Array[Array[Double]] = Array.fill(3)(new Array[Double](rank * rank))
+  }
+
+  /** gram = FᵀF — the dgemm call Breeze makes for `f.t * f`. */
+  private def gram(f: DenseMatrix[Double], gram: Array[Double]): Unit =
+    blas.dgemm("T", "N", f.cols, f.cols, f.rows,
+      1.0, f.data, 0, f.rows, f.data, 0, f.rows, 0.0, gram, 0, f.cols)
+
+  /** out = A·B for column-major A (rows×k) and B (k×cols) — the dgemm call
+    * Breeze makes for a DenseMatrix product. */
+  private def multiply(
+      a: Array[Double], rows: Int, k: Int, b: Array[Double], cols: Int,
+      out: Array[Double]): Unit =
+    blas.dgemm("N", "N", rows, cols, k, 1.0, a, 0, rows, b, 0, k, 0.0, out, 0, rows)
+
+  /** out = p ⊙ q over the first n entries. */
+  private def hadamard(p: Array[Double], q: Array[Double], n: Int, out: Array[Double]): Unit = {
+    var i = 0
+    while (i < n) { out(i) = p(i) * q(i); i += 1 }
+  }
+
+  /** Fₘ ⊙= clip(num, ε) ⊘ clip(den, ε); num and den keep their unclipped
+    * values. */
+  private def update(f: DenseMatrix[Double], num: Array[Double], den: Array[Double]): Unit = {
+    val d = f.data
+    var i = 0
+    while (i < d.length) {
+      val n = if (num(i) < Epsilon) Epsilon else num(i)
+      val q = if (den(i) < Epsilon) Epsilon else den(i)
+      d(i) = d(i) * n / q
+      i += 1
+    }
+  }
+
+  /** One multiplicative update of factor `mode`, then its Gram matrix. */
+  private def updateMode(
+      unfolded: DenseMatrix[Double], factors: Array[DenseMatrix[Double]],
+      mode: Int, ws: Workspace): Unit = {
+    val rank = factors(mode).cols
+    // the other modes in ascending order (matches the unfold layout)
+    val (lo, hi) = mode match {
+      case 0 => (1, 2)
+      case 1 => (0, 2)
+      case 2 => (0, 1)
+    }
+    // V = ⊙ FₑᵀFₑ over the other modes
+    hadamard(ws.grams(lo), ws.grams(hi), rank * rank, ws.v)
+    khatriRao(factors(lo), factors(hi), ws.kr)
+    val rows = unfolded.rows
+    multiply(unfolded.data, rows, unfolded.cols, ws.kr, rank, ws.num)
+    multiply(factors(mode).data, rows, rank, ws.v, rank, ws.den)
+    update(factors(mode), ws.num, ws.den)
+    gram(factors(mode), ws.grams(mode))
+  }
+
+  /** ‖X − X̂‖/‖X‖ without materializing X̂ (the same quantity the
+    * reference computes explicitly):
+    *   ‖X̂‖²   = Σ (AᵀA ∘ BᵀB ∘ CᵀC)
+    *   ⟨X,X̂⟩ = Σ (U2·KR(A,B) ∘ C)   — the unclipped mode-2 numerator
+    *            doesn't involve C, so it is exact for the post-update C;
+    *            this removes the dominant S×(T·M)×F gemm + subtraction
+    *            per iteration. */
+  private def recError(normX: Double, c: DenseMatrix[Double], ws: Workspace): Double = {
+    val Array(ata, btb, ctc) = ws.grams
+    var normApproxSq = 0.0
+    var i = 0
+    while (i < ata.length) { normApproxSq += ata(i) * btb(i) * ctc(i); i += 1 }
+    val cd = c.data
+    var inner = 0.0
+    i = 0
+    while (i < cd.length) { inner += ws.num(i) * cd(i); i += 1 }
+    val errSq = normX * normX - 2.0 * inner + normApproxSq
+    math.sqrt(math.max(errSq, 0.0)) / normX
   }
 
   /** Decompose a (S,T,M) row-major tensor at the given rank. */
@@ -127,53 +226,27 @@ object NNParafac {
 
     val unfolds = Array(unfold(x, s, t, m, 0), unfold(x, s, t, m, 1), unfold(x, s, t, m, 2))
     val normX = frobenius(unfolds(0))
+    val ws = new Workspace(dims, rank)
+    var mode = 0
+    while (mode < 3) { gram(factors(mode), ws.grams(mode)); mode += 1 }
 
     var prevErr = Double.NaN
-    var recError = Double.NaN
+    var err = Double.NaN
     var iteration = 0
     var converged = false
 
     while (iteration < nIterMax && !converged) {
-      // unclipped mode-2 numerator U2·KR(A,B) — reused for the error
-      var num2: DenseMatrix[Double] = null
-      var mode = 0
-      while (mode < 3) {
-        val others = Seq(0, 1, 2).filterNot(_ == mode)
-        // V = ⊙ FₑᵀFₑ over other modes
-        val v = others
-          .map(e => (factors(e).t * factors(e)): DenseMatrix[Double])
-          .reduce((p, q) => p *:* q)
-        // KR over other modes in ascending order (matches unfold layout)
-        val kr = khatriRao(factors(others.head), factors(others.last))
-        val numerator = unfolds(mode) * kr
-        if (mode == 2) num2 = numerator.copy
-        clipInPlace(numerator, Epsilon)
-        val denominator = factors(mode) * v
-        clipInPlace(denominator, Epsilon)
-        factors(mode) = factors(mode) *:* numerator /:/ denominator
-        mode += 1
-      }
+      mode = 0
+      while (mode < 3) { updateMode(unfolds(mode), factors, mode, ws); mode += 1 }
+      // ws.num still holds the unclipped mode-2 numerator
+      err = recError(normX, factors(2), ws)
 
-      // rec error ‖X − X̂‖/‖X‖ without materializing X̂ (same quantity the
-      // reference computes explicitly):
-      //   ‖X̂‖²   = Σ (AᵀA ∘ BᵀB ∘ CᵀC)
-      //   ⟨X,X̂⟩ = Σ (U2·KR(A,B) ∘ C)   — num2 doesn't involve C, so it
-      //            is exact for the post-update C; this removes the
-      //            dominant S×(T·M)×F gemm + subtraction per iteration
-      val ata = factors(0).t * factors(0)
-      val btb = factors(1).t * factors(1)
-      val ctc = factors(2).t * factors(2)
-      val normApproxSq = sum(ata *:* btb *:* ctc)
-      val inner = sum(num2 *:* factors(2))
-      val errSq = normX * normX - 2.0 * inner + normApproxSq
-      recError = math.sqrt(math.max(errSq, 0.0)) / normX
-
-      if (iteration > 1 && math.abs(prevErr - recError) < tol) converged = true
-      prevErr = recError
+      if (iteration > 1 && math.abs(prevErr - err) < tol) converged = true
+      prevErr = err
       iteration += 1
     }
 
-    Result(factors, recError, iteration)
+    Result(factors, err, iteration)
   }
 
   /** R² = 1 − recError², as logged by the reference (decompose_parafac.py:107). */

@@ -2,7 +2,10 @@ package graft.ms.ops
 
 import graft.ms.{ParafacModelRow, SliceTensor}
 import graft.ms.linalg.{GaussianImpute, NNParafac}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Stage-5: non-negative PARAFAC over every (slice, F) pair.
   *
@@ -13,12 +16,16 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * reference fanned them out as processes over GPUs via CUDA MPS
   * (decompose_workstation.sh:9-46) — here they are Spark tasks.
   *
-  * Scale notes: tensors are exploded to (slice, F) pairs and
-  * repartitioned so a 1000-executor cluster load-balances individual
-  * decompositions (wall-clock is bounded by the slowest single
-  * decomposition, not the slowest slice × |F| chain). The duplicated
-  * tensor shuffle is bounded: slice tensors are ≤ a few MB by
-  * construction.
+  * Scale notes: the stage's partition count follows the unit count,
+  * capped at n = min(units, 4 × defaultParallelism), and not the input's
+  * partition count: [[workList]] spreads the (slice, F) units by index,
+  * so a task holds at most ⌈units / n⌉ units. (Sizing by input
+  * partitions × |F| packed a tensor store that reads back as one
+  * partition into 5 tasks of 4 units on 4 cores: two waves, the second
+  * with one busy core.) While units ≤ 4 × defaultParallelism, each task
+  * holds one unit, so the scheduler balances single decompositions, not
+  * slice × |F| chains. The duplicated tensor shuffle is bounded: slice
+  * tensors are ≤ a few MB by construction.
   */
 object Decomposer {
 
@@ -61,6 +68,35 @@ object Decomposer {
       iterations = res.iterations)
   }
 
+  /** The stage-5 work list: every (non-trivial slice, F) unit not yet in
+    * `done` (its swath_key, rt_window, ncomp columns), spread by unit
+    * index over n = min(units, 4 × defaultParallelism) partitions, so no
+    * partition holds more than ⌈units / n⌉ units. Sizing n counts the
+    * units, so the call itself runs a Spark job (two if the input has
+    * more than one partition, for the index). */
+  private[graft] def workList(
+      spark: SparkSession,
+      slices: Dataset[SliceTensor],
+      fMin: Int,
+      fMax: Int,
+      done: Option[DataFrame] = None): RDD[(SliceTensor, Int)] = {
+    import spark.implicits._
+    val pairs = slices
+      .filter((t: SliceTensor) => !isTrivial(t))
+      .flatMap(t => (fMin to fMax).map(f => (t, f)))
+    val todo = done.fold(pairs) { d =>
+      pairs.toDF().join(d,
+        col("_1.swath_key") === d("swath_key") &&
+          col("_1.rt_window") === d("rt_window") &&
+          col("_2") === d("ncomp"),
+        "left_anti").as[(SliceTensor, Int)]
+    }
+    val indexed = todo.rdd.zipWithIndex().map(_.swap)
+    val units = indexed.count()
+    val n = math.max(1L, math.min(units, 4L * spark.sparkContext.defaultParallelism))
+    indexed.partitionBy(new HashPartitioner(n.toInt)).values
+  }
+
   def run(
       spark: SparkSession,
       slices: Dataset[SliceTensor],
@@ -68,15 +104,24 @@ object Decomposer {
       fMax: Int,
       maxIter: Int = 5000,
       tol: Double = 1e-7,
-      seed: Long = 123L): Dataset[ParafacModelRow] = {
+      seed: Long = 123L): Dataset[ParafacModelRow] =
+    decomposeAll(spark, workList(spark, slices, fMin, fMax), maxIter, tol, seed)
+
+  /** Decomposes every unit of a work list in its n tasks, then hands the
+    * models on in min(n, defaultParallelism) partitions: a model is a few
+    * KB, and the stages that read them (the store write, peak counting,
+    * the registry's cached store) pay per partition, not per model. */
+  private def decomposeAll(
+      spark: SparkSession,
+      work: RDD[(SliceTensor, Int)],
+      maxIter: Int,
+      tol: Double,
+      seed: Long): Dataset[ParafacModelRow] = {
     import spark.implicits._
-    val nPairs = math.max(spark.sparkContext.defaultParallelism,
-      (slices.rdd.getNumPartitions * (fMax - fMin + 1)))
-    slices
-      .filter((t: SliceTensor) => !isTrivial(t))
-      .flatMap(t => (fMin to fMax).map(f => (t, f)))
-      .repartition(nPairs)
+    val out = math.min(work.getNumPartitions, spark.sparkContext.defaultParallelism)
+    spark.createDataset(work
       .map { case (t, f) => decomposeSlice(t, f, maxIter, tol, seed) }
+      .coalesce(out, shuffle = true))
   }
 
   /** The reference's `skip_completed` resume (decompose_parafac
@@ -95,30 +140,13 @@ object Decomposer {
       maxIter: Int = 5000,
       tol: Double = 1e-7,
       seed: Long = 123L): Dataset[ParafacModelRow] = {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val pairs = slices
-      .filter((t: SliceTensor) => !isTrivial(t))
-      .flatMap(t => (fMin to fMax).map(f => (t, f)))
     val storePath = new org.apache.hadoop.fs.Path(modelStorePath)
     val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val todo =
-      if (!fs.exists(storePath)) pairs
-      else {
-        val done = spark.read.parquet(modelStorePath)
-          .select(col("swath_key"), col("rt_window"), col("ncomp"))
-          .distinct()
-        pairs.toDF().join(done,
-          col("_1.swath_key") === done("swath_key") &&
-            col("_1.rt_window") === done("rt_window") &&
-            col("_2") === done("ncomp"),
-          "left_anti").as[(SliceTensor, Int)]
-      }
-    val nPairs = math.max(spark.sparkContext.defaultParallelism,
-      (slices.rdd.getNumPartitions * (fMax - fMin + 1)))
-    todo
-      .repartition(nPairs)
-      .map { case (t, f) => decomposeSlice(t, f, maxIter, tol, seed) }
+    val done = Option.when(fs.exists(storePath))(spark.read.parquet(modelStorePath)
+      .select(col("swath_key"), col("rt_window"), col("ncomp"))
+      .distinct())
+    decomposeAll(spark, workList(spark, slices, fMin, fMax, done), maxIter, tol, seed)
       .write.mode("append").parquet(modelStorePath)
     spark.read.parquet(modelStorePath).as[ParafacModelRow]
   }

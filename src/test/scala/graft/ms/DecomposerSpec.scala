@@ -47,4 +47,34 @@ class DecomposerSpec extends AnyFunSuite with Matchers with SparkSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(store).getParentFile)
   }
+
+  test("work list spreads 4 slices × F 10–14 from one partition evenly") {
+    import spark.implicits._
+    val slices = (0 until 4).map(tensor("100.00", _)).toDS().coalesce(1)
+    slices.rdd.getNumPartitions shouldBe 1
+    val sizes = Decomposer.workList(spark, slices, 10, 14)
+      .glom().map(_.length).collect()
+    val units = 4 * 5
+    val n = math.min(units, 4 * spark.sparkContext.defaultParallelism)
+    sizes.length shouldBe n
+    sizes.sum shouldBe units
+    sizes.max should be <= (units + n - 1) / n
+  }
+
+  test("run and runResumable give identical model rows") {
+    import spark.implicits._
+    val slices = (0 until 4).map(tensor("100.00", _)).toDS().coalesce(1)
+    def rows(ds: org.apache.spark.sql.Dataset[ParafacModelRow]) =
+      ds.collect().map(m => (m.swath_key, m.rt_window, m.ncomp, m.samples,
+        m.mz_indices, m.sample_mode.toSeq, m.time_mode.toSeq,
+        m.mass_mode.toSeq, m.rsq, m.iterations)).sortBy(r => (r._2, r._3))
+    val dir = java.nio.file.Files.createTempDirectory("graft-models")
+    try {
+      val viaRun = rows(Decomposer.run(spark, slices, 10, 14, maxIter = 30))
+      val viaResume = rows(Decomposer.runResumable(spark, slices, 10, 14,
+        dir.toString + "/store", maxIter = 30))
+      viaRun.length shouldBe 20
+      viaResume shouldBe viaRun
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

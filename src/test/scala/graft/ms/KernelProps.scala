@@ -1,5 +1,6 @@
 package graft.ms
 
+import graft.ms.linalg.{NNParafac, NumpyRandom}
 import graft.ms.ops.Tensorizer
 import graft.sources.{MzMLSource, SeqIO}
 import org.scalacheck.{Gen, Prop, Properties}
@@ -78,6 +79,41 @@ object KernelProps extends Properties("ms.kernels") {
       MzMLSource.roundHalfEven(4.435, 2) == 4.43 &&
       MzMLSource.roundHalfEven(4.445, 2) == 4.44 &&
       MzMLSource.roundHalfEven(2.675, 2) == 2.68)
+
+  private val parafacCase: Gen[(Int, Int, Int, Int, Long)] = for {
+    s <- Gen.choose(1, 8)
+    t <- Gen.choose(1, 8)
+    m <- Gen.choose(1, 8)
+    rank <- Gen.choose(1, 9)
+    seed <- Gen.choose(0L, 1000L)
+  } yield (s, t, m, rank, seed)
+
+  // The kernel's error comes from cached Gram matrices and the mode-2
+  // numerator; a cache left stale by a factor update drifts from the
+  // error of the factors it returns. Ranks above a dimension included.
+  property("decompose's recError is ‖X − X̂‖/‖X‖ of its returned factors") =
+    forAll(parafacCase) { case (s, t, m, rank, seed) =>
+      val rng = new NumpyRandom(seed)
+      val x = Array.fill(s * t * m)(rng.nextDouble())
+      val res = NNParafac.decompose(x, s, t, m, rank, nIterMax = 25, tol = 0.0)
+      val Array(a, b, c) = res.factors
+      var diffSq, normSq = 0.0
+      for (is <- 0 until s; it <- 0 until t; im <- 0 until m) {
+        var xhat = 0.0
+        for (f <- 0 until rank) xhat += a(is, f) * b(it, f) * c(im, f)
+        val v = x((is * t + it) * m + im)
+        diffSq += (v - xhat) * (v - xhat)
+        normSq += v * v
+      }
+      val explicit = math.sqrt(diffSq / normSq)
+      // Where the fit is exact (a 5×1×1 tensor at any rank), the
+      // kernel's ‖X‖² − 2⟨X,X̂⟩ + ‖X̂‖² cancels to rounding noise of
+      // ~1e-16 ‖X‖², so there the squared errors are compared instead.
+      val squaredGap = math.abs(res.recError * res.recError - diffSq / normSq)
+      Prop(math.abs(res.recError - explicit) <= 1e-9 * explicit ||
+        squaredGap <= 1e-14) :|
+        s"($s,$t,$m) rank $rank: returned ${res.recError}, explicit $explicit"
+    }
 
   private val peptide: Gen[String] =
     Gen.listOf(Gen.oneOf("ACDEFGHIKLMNPQRSTVWY".toSeq)).map(_.mkString)

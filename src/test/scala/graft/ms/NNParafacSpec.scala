@@ -108,11 +108,47 @@ class NNParafacSpec extends AnyFunSuite {
     assert(res.iterations == 200)
   }
 
+  /** SHA-256 over every factor entry's bits, mode by mode, column-major;
+    * the first 16 hex digits. */
+  private def factorDigest(res: NNParafac.Result): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    for (f <- res.factors; c <- 0 until f.cols; r <- 0 until f.rows) {
+      buf.clear()
+      buf.putLong(java.lang.Double.doubleToLongBits(f(r, c)))
+      md.update(buf.array())
+    }
+    md.digest().take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  // Bit-exact goldens, recorded from the Breeze-temporaries kernel that the
+  // workspace kernel replaced: the floating-point operation order must not
+  // change. The bits depend on the BLAS backend netlib selects at run time;
+  // these are the pure-Java backend's (no native BLAS on the library path,
+  // no `--add-modules jdk.incubator.vector`). Another backend gives other
+  // bits, which is a host difference, not a regression.
+  // (name, seed, (S, T, M), rank, nIterMax, recError bits, iterations, digest)
+  private val bitGoldens = Seq(
+    ("3x30x54 F=12", 11L, (3, 30, 54), 12, 300, 4601293947760471645L, 300, "2816aebb0cd03df1"),
+    ("2x3x3 rank 7", 12L, (2, 3, 3), 7, 1000, 4560817709183070878L, 1000, "f70e4401b3bc4695"),
+    ("5x7x9 rank 1", 13L, (5, 7, 9), 1, 1000, 4602954708093129502L, 4, "6ceddbff051379db"))
+
+  for ((name, seed, (s, t, m), rank, nIter, errBits, iters, digest) <- bitGoldens)
+    test(s"bit-exact golden: $name") {
+      val rng = new NumpyRandom(seed)
+      val x = Array.fill(s * t * m)(rng.nextDouble())
+      val res = NNParafac.decompose(x, s, t, m, rank = rank, nIterMax = nIter)
+      val got = (java.lang.Double.doubleToLongBits(res.recError),
+        res.iterations, factorDigest(res))
+      assert(got == ((errBits, iters, digest)), s"got $got")
+    }
+
   test("khatriRao row ordering matches unfold layout") {
     import breeze.linalg.DenseMatrix
     val a = new DenseMatrix(2, 1, Array(1.0, 2.0)) // 2×1
     val b = new DenseMatrix(3, 1, Array(3.0, 4.0, 5.0)) // 3×1
-    val kr = NNParafac.khatriRao(a, b)
+    val kr = DenseMatrix.zeros[Double](6, 1)
+    NNParafac.khatriRao(a, b, kr.data)
     assert(kr.rows == 6 && kr.cols == 1)
     assert((0 until 6).map(kr(_, 0)) == Seq(3.0, 4.0, 5.0, 6.0, 8.0, 10.0))
   }

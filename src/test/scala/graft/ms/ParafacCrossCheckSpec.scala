@@ -9,8 +9,9 @@ import org.scalatest.matchers.should.Matchers
 /** Cross-check of the DISTRIBUTED NN-PARAFAC against an independent
   * sequential implementation, on REAL slice tensors.
   *
-  * [[graft.ms.linalg.NNParafac]] is the production kernel: Breeze
-  * matrices and a Gram-matrix shortcut for the reconstruction error
+  * [[graft.ms.linalg.NNParafac]] is the production kernel: BLAS dgemm
+  * into a per-decomposition workspace, cached Gram matrices and a
+  * Gram-matrix shortcut for the reconstruction error
   * (‖X̂‖² and ⟨X,X̂⟩ from F×F products, never materializing X̂).
   * [[SeqParafac]] below shares NOTHING with it but the published
   * algorithm contract (multiplicative-update ALS, tensorly-0.4.3
