@@ -22,6 +22,15 @@ import org.apache.spark.sql.functions._
   * broadcast-joined against model/result data; peak counting is a
   * flatMap over models (no shuffle); selection is one window aggregate
   * partitioned by (swath_start, rt_window).
+  *
+  * Two paths compute stages 6–7. The registry's queries compose the
+  * relational one: `modelIndex` → `peakCountsWithModelId` →
+  * `bestModels` → `spectrumIndex`, all DataFrames. The pipeline
+  * (`CandiaPipeline.select`) takes the driver path, [[selectBest]]: the
+  * same grid, ordinals and selection over collected per-window and
+  * per-model rows, O(windows) + O(slices × F), so the pipeline's tail
+  * runs a handful of Spark jobs instead of dozens. `CandiaSelectSpec`
+  * pins the two paths equal, row for row.
   */
 object Indexing {
 
@@ -162,6 +171,81 @@ object Indexing {
       .drop("mx")
       .withColumn("swath_start_key",
         format_string("%.2f", col("swath_start") / lit(100.0)))
+  }
+
+  /** [[centsKey]] of one value, as Spark evaluates it: bround of a
+    * double rounds the value's shortest decimal form, half-even. */
+  def cents(v: Double): Long =
+    java.math.BigDecimal.valueOf(v * 100.0)
+      .setScale(0, java.math.RoundingMode.HALF_EVEN).longValue
+
+  /** One model's component counts from the count store:
+    * `count(npeaks == 1)` and `count(*)`. */
+  final case class ModelCounts(
+      swath_key: String,
+      rt_window: Int,
+      ncomp: Int,
+      n_unimodal: Long,
+      n: Long)
+
+  /** One row of [[bestModels]], plus the [[spectrumIndex]] scan of the
+    * model's component 0 (component k has scan `first_scan + k`). */
+  final case class Selected(
+      model_id: Long,
+      unimodal_fraction: Double,
+      swath_start: Long,
+      rt_window: Int,
+      ncomp: Int,
+      swath_start_key: String,
+      first_scan: Long)
+
+  /** The driver path of `modelIndex` → `peakCountsWithModelId` →
+    * `bestModels` → `spectrumIndex`, over the adjusted windows' lower
+    * bounds and per-model counts: the same grid (swath rank by [[cents]],
+    * then RT window, then F), the same counts join (counts outside the
+    * grid drop out), the same unimodal fraction, every model tying at
+    * the maximum kept, models without a unimodal component dropped.
+    * Ordered by model_id. */
+  def selectBest(
+      windowLowers: Seq[Float],
+      nRtWindows: Int,
+      fMin: Int,
+      fMax: Int,
+      counts: Seq[ModelCounts]): Seq[Selected] = {
+    val rank = windowLowers.map(l => cents(l.toDouble)).distinct.sorted
+      .zipWithIndex.toMap
+    val nF = fMax - fMin + 1
+    val sumF = (fMin + fMax) * nF / 2
+    val perModel = counts
+      .flatMap { c =>
+        val start = cents(c.swath_key.toDouble)
+        rank.get(start)
+          .filter(_ => c.rt_window >= 0 && c.rt_window < nRtWindows &&
+            c.ncomp >= fMin && c.ncomp <= fMax)
+          .map { r =>
+            val id = (r.toLong * nRtWindows + c.rt_window) * nF + (c.ncomp - fMin)
+            ((id, start, c.rt_window, c.ncomp), (c.n_unimodal, c.n))
+          }
+      }
+      .groupMapReduce(_._1)(_._2) { case ((u1, n1), (u2, n2)) => (u1 + u2, n1 + n2) }
+    val fractions = perModel.toSeq.collect {
+      case (model, (unimodal, n)) if unimodal > 0 => (model, unimodal.toDouble / n)
+    }
+    fractions
+      .groupBy { case ((_, start, rt, _), _) => (start, rt) }
+      .values
+      .flatMap { slice =>
+        val mx = slice.map(_._2).max
+        slice.filter(_._2 == mx)
+      }
+      .map { case ((id, start, rt, ncomp), frac) =>
+        val fIdx = ncomp - fMin
+        Selected(id, frac, start, rt, ncomp,
+          "%.2f".formatLocal(java.util.Locale.US, start / 100.0),
+          (id / nF) * sumF + fIdx * fMin + fIdx * (fIdx - 1) / 2)
+      }
+      .toSeq
+      .sortBy(_.model_id)
   }
 
   /** Stage-8a: the pure stacking step — one long row per (model, sample,

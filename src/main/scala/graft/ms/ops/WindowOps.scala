@@ -1,8 +1,10 @@
 package graft.ms.ops
 
-import org.apache.spark.sql.DataFrame
+import graft.ms.AdjustedPeak
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Stages 2–3: isolation-window adjustment and slicing.
   *
@@ -111,16 +113,19 @@ object WindowOps {
       .mode("overwrite")
       .parquet(path)
 
-  /** Matching source: partition-type inference is disabled so swath_key
-    * stays the reference's 2-dp STRING key ("440.00", not 440.0 —
-    * the string form IS the identity, split_csv_maps_to_slices.py:81-84);
-    * rt_window is cast back to int. Slice-key filters prune partitions. */
-  def readSlices(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false") // partition schema resolves eagerly here
-    try spark.read.parquet(path)
-      .withColumn("rt_window", col("rt_window").cast("int"))
-    finally spark.conf.set(key, prev)
-  }
+  /** The slice store's schema: the stage-3 peak columns, then the
+    * partition columns swath_key (the reference's 2-dp STRING key,
+    * "440.00", not 440.0 — the string form IS the identity,
+    * split_csv_maps_to_slices.py:81-84) and rt_window (int). */
+  private val sliceSchema = StructType(
+    Encoders.product[AdjustedPeak].schema.filterNot(_.name == "rt_window") :+
+      StructField("swath_key", StringType) :+
+      StructField("rt_window", IntegerType))
+
+  /** Matching source, read with the known slice schema: no job infers
+    * it, partition values take its types, and a store written from no
+    * rows (a directory without data files) reads back empty. Slice-key
+    * filters prune partitions. */
+  def readSlices(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    spark.read.schema(sliceSchema).parquet(path)
 }

@@ -1,10 +1,13 @@
 package graft.pipeline
 
 import graft.ms.{AdjustedPeak, ComponentPeaks, ParafacModelRow, SliceTensor}
-import graft.ms.ops.{Decomposer, Indexing, TensorizeOp, WindowOps}
+import graft.ms.ops.{Decomposer, Indexing, TensorizeOp, Tensorizer, WindowOps}
 import graft.sources.{MzMLSource, MzXMLWriter}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
 
 /** Pipeline configuration — the keys of the reference's experiment YAML
   * that drive stages 1–9 (test/test_experiment/config/candia.yaml:1-64). */
@@ -30,14 +33,27 @@ final case class CandiaConfig(
     seed: Long = 123L)
 
 /** Stage outputs of one end-to-end run (the in-engine replacements of
-  * the reference's on-disk inter-stage artifacts). */
+  * the reference's on-disk inter-stage artifacts). A result built by
+  * [[CandiaPipeline.select]] also carries `best`, the best models as the
+  * driver already holds them, so stage 8 and the export need no second
+  * selection; a result composed from distributed frames leaves it empty,
+  * and those two calls collect what they need from `bestModels`. */
 final case class CandiaResult(
     peaks: Dataset[AdjustedPeak],
     tensors: Dataset[SliceTensor],
     models: Dataset[ParafacModelRow],
     peakCounts: Dataset[ComponentPeaks],
     bestModels: DataFrame,
-    spectrumIndex: DataFrame)
+    spectrumIndex: DataFrame,
+    best: Option[Seq[BestModel]] = None)
+
+/** One best model on the driver: its factors, the global scan ordinal of
+  * its component 0, and its adjusted window's centre (the MS1-absent
+  * pseudo-precursor, id_models_concat.py:85-89). */
+final case class BestModel(
+    row: ParafacModelRow,
+    firstScan: Long,
+    isolationCentre: Double)
 
 /** The whole CANDIA dataflow (reference driver script `candia:1-69`,
   * SURVEY §3.1) as ONE Spark program: the reference's 9 process-per-file
@@ -46,6 +62,14 @@ final case class CandiaResult(
   * shuffle boundaries, Snakemake scheduling becomes Spark task
   * scheduling, and every intermediate is a Dataset that can be
   * checkpointed to partitioned parquet instead of ~10⁶ tiny files.
+  *
+  * What reaches the driver: stages 1–5 stay distributed. Stages 6–8 are
+  * bookkeeping over the model grid, and [[select]] does it on the driver
+  * from three collects: one row per adjusted window (O(windows): tens
+  * of windows, whatever the run length), one row per model (O(slices ×
+  * F)), and the best models' factors (O(slices)), which the mzXML export
+  * needs on the driver anyway. No action returns O(peaks) rows, so the
+  * tail stays a few Spark jobs at any input size.
   */
 object CandiaPipeline {
 
@@ -89,7 +113,8 @@ object CandiaPipeline {
       .as[AdjustedPeak]
   }
 
-  /** Stages 1–8: mzML files → models + best-model selection. Passing
+  /** Stages 1–8: mzML files → models + best-model selection (stages
+    * 6–8 through [[select]]). Passing
     * `slicesPath` routes the peak table through the partitioned on-disk
     * slice layout between stages 3 and 4; passing `tensorStorePath` /
     * `modelStorePath` / `countStorePath` makes the tensorize,
@@ -107,7 +132,6 @@ object CandiaPipeline {
       modelStorePath: Option[String] = None,
       tensorStorePath: Option[String] = None,
       countStorePath: Option[String] = None): CandiaResult = {
-    import spark.implicits._
     val ingested = ingest(spark, mzmlFiles, config)
     val peaks = slicesPath match {
       case Some(p) => checkpointSlices(spark, ingested, p)
@@ -135,17 +159,125 @@ object CandiaPipeline {
         config.avgPeakFwhmSec, config.windowSizeSec)
     }).persist()
 
-    val windows = peaks.toDF()
-      .select(col("swath_lower_adjusted")).distinct()
-    val nRt = peaks.toDF().agg(max(col("rt_window"))).head().getInt(0) + 1
-    val index = Indexing.modelIndex(spark, windows, nRt,
-      config.parafacMinComp, config.parafacMaxComp)
-    val best = Indexing.bestModels(
-      Indexing.peakCountsWithModelId(counts, index), index)
-
-    CandiaResult(peaks, tensors, models, counts, best,
-      Indexing.spectrumIndex(index))
+    select(spark, peaks, tensors, models, counts, config)
   }
+
+  /** Stages 6–8 bookkeeping on the driver: the model grid, the best
+    * models and their scan ordinals, from three small collects.
+    *  1. Per adjusted window of `peaks`: lower and upper bound and the
+    *     last RT window, O(windows) rows. The grid is the peak table's
+    *     windows × 0..max(rt_window) × F, as `Indexing.modelIndex` builds
+    *     it, not the tensors' keys.
+    *  2. Per model of `counts`: its unimodal and total component counts,
+    *     O(slices × F) rows; `Indexing.selectBest` selects from them.
+    *  3. The best models' rows of `models`, factors included: O(slices)
+    *     rows, which stage 8 and the export need anyway.
+    * Nothing O(peaks) reaches the driver. The returned `bestModels` and
+    * `spectrumIndex` are local frames with the relational path's
+    * columns; `spectrumIndex` holds the best models' components only,
+    * the rows stage 8 and the export join against. */
+  def select(
+      spark: SparkSession,
+      peaks: Dataset[AdjustedPeak],
+      tensors: Dataset[SliceTensor],
+      models: Dataset[ParafacModelRow],
+      counts: Dataset[ComponentPeaks],
+      config: CandiaConfig): CandiaResult = {
+    import spark.implicits._
+    val windows = windowBounds(spark, peaks)
+    val nRt = if (windows.isEmpty) 0 else windows.map(_._3).max + 1
+    val modelCounts = reduceOnDriver(counts.rdd.map(c =>
+        (c.swath_key, c.rt_window, c.ncomp) -> ((if (c.npeaks == 1) 1L else 0L), 1L))) {
+        case ((u1, n1), (u2, n2)) => (u1 + u2, n1 + n2)
+      }
+      .map { case ((key, rt, f), (unimodal, n)) =>
+        Indexing.ModelCounts(key, rt, f, unimodal, n)
+      }.toSeq
+    val selected = Indexing.selectBest(windows.map(_._1), nRt,
+      config.parafacMinComp, config.parafacMaxComp, modelCounts)
+    val firstScan = selected
+      .map(b => (b.swath_start_key, b.rt_window, b.ncomp) -> b.first_scan).toMap
+    val bestModels = selected.toDF().drop("first_scan")
+    val spectrumIndex = selected
+      .flatMap(b => (0 until b.ncomp).map(k =>
+        (b.swath_start, b.rt_window, b.ncomp, b.model_id, k.toLong,
+          b.first_scan + k)))
+      .toDF("swath_start", "rt_window", "ncomp", "model_id", "spectrum_num",
+        "scan")
+    CandiaResult(peaks, tensors, models, counts, bestModels, spectrumIndex,
+      Some(attach(modelsIn(models, firstScan.keySet), firstScan,
+        centres(windows))))
+  }
+
+  /** (lower, upper, max rt_window) per adjusted window of the peak
+    * table, O(windows) rows. */
+  private def windowBounds(
+      spark: SparkSession,
+      peaks: Dataset[AdjustedPeak]): Seq[(Float, Float, Int)] = {
+    import spark.implicits._
+    reduceOnDriver(peaks
+        .select("swath_lower_adjusted", "swath_upper_adjusted", "rt_window")
+        .as[(Float, Float, Int)].rdd
+        .map { case (lo, hi, rt) => lo -> ((hi, rt)) }) {
+        case ((h1, r1), (h2, r2)) => (h1 max h2, r1 max r2)
+      }
+      .map { case (lo, (hi, rt)) => (lo, hi, rt) }.toSeq
+  }
+
+  /** Reduces `rows` per key in one Spark job: each task reduces its own
+    * rows, and the driver folds the task results in as they arrive, so it
+    * holds one entry per key. A SQL groupBy would add a shuffle, and with
+    * it a second job. */
+  private def reduceOnDriver[K, V](rows: RDD[(K, V)])(f: (V, V) => V): Map[K, V] = {
+    def add(m: Map[K, V], kv: (K, V)): Map[K, V] =
+      m.updated(kv._1, m.get(kv._1).fold(kv._2)(f(_, kv._2)))
+    rows
+      .mapPartitions { it =>
+        val m = mutable.HashMap.empty[K, V]
+        it.foreach { case (k, v) => m.update(k, m.get(k).fold(v)(f(_, v))) }
+        Iterator(m.toMap)
+      }
+      .fold(Map.empty[K, V])((a, b) => b.foldLeft(a)(add))
+  }
+
+  /** Adjusted-window midpoints by swath key: the MS1-absent
+    * pseudo-precursor sits at (lower + upper) / 2
+    * (id_models_concat.py:85-89), NOT at the lower bound. */
+  private def centres(windows: Seq[(Float, Float, Int)]): Map[String, Double] =
+    windows.map { case (lo, hi, _) =>
+      Tensorizer.swathKey(lo.toDouble) -> (lo.toDouble + hi.toDouble) / 2.0
+    }.toMap
+
+  /** The model rows whose (swath_key, rt_window, ncomp) is in `keys`. */
+  private def modelsIn(
+      models: Dataset[ParafacModelRow],
+      keys: Set[(String, Int, Int)]): Seq[ParafacModelRow] =
+    if (keys.isEmpty) Seq.empty
+    else models.filter((m: ParafacModelRow) =>
+      keys.contains((m.swath_key, m.rt_window, m.ncomp))).collect().toSeq
+
+  private def attach(
+      rows: Seq[ParafacModelRow],
+      firstScan: Map[(String, Int, Int), Long],
+      centre: Map[String, Double]): Seq[BestModel] =
+    rows.map(m => BestModel(m, firstScan((m.swath_key, m.rt_window, m.ncomp)),
+      centre.getOrElse(m.swath_key, m.swath_key.toDouble)))
+
+  /** A result's best models: those [[select]] left on it, else collected
+    * from its `bestModels`, `spectrumIndex`, `models` and `peaks`. */
+  private def bestOf(spark: SparkSession, result: CandiaResult): Seq[BestModel] =
+    result.best.getOrElse {
+      import spark.implicits._
+      val firstScan = result.bestModels
+        .select("swath_start", "rt_window", "ncomp", "swath_start_key")
+        .join(result.spectrumIndex.filter(col("spectrum_num") === 0),
+          Seq("swath_start", "rt_window", "ncomp"))
+        .select("swath_start_key", "rt_window", "ncomp", "scan")
+        .as[(String, Int, Int, Long)].collect()
+        .map { case (s, rt, f, scan) => (s, rt, f) -> scan }.toMap
+      attach(modelsIn(result.models, firstScan.keySet), firstScan,
+        centres(windowBounds(spark, result.peaks)))
+    }
 
   /** Stage 8 (collect_sample_modes.py:40-76): stack the SAMPLE mode of
     * every BEST model — the reference loads only the model files listed
@@ -153,17 +285,21 @@ object CandiaPipeline {
     * each component by its global spectrum-index `scan` ordinal.
     * Returns (sample_modes, spectra_with_sample_abundance): the first is
     * the feather-analog long table, the second the (scan, sample_num,
-    * abundance) table that search-engine PSMs quantify against. */
+    * abundance) table that search-engine PSMs quantify against. Both are
+    * `Indexing`'s frames over the best models' rows, which a result from
+    * [[select]] already carries. */
   def collectSampleModes(
       spark: SparkSession,
       result: CandiaResult): (DataFrame, DataFrame) = {
-    val bestKeys = result.bestModels
-      .select(col("swath_start_key"), col("rt_window"), col("ncomp"))
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
-    val best = result.models.filter((m: ParafacModelRow) =>
-      bestKeys.contains((m.swath_key, m.rt_window, m.ncomp)))
-    val sm = Indexing.sampleModes(spark, best)
+    import spark.implicits._
+    val rows = result.best.fold {
+      val keys = result.bestModels
+        .select("swath_start_key", "rt_window", "ncomp")
+        .as[(String, Int, Int)].collect().toSet
+      modelsIn(result.models, keys)
+    }(_.map(_.row))
+    // one partition: the CV window then needs no shuffle
+    val sm = Indexing.sampleModes(spark, rows.toDS().coalesce(1))
     (sm, Indexing.spectraWithSampleAbundance(sm, result.spectrumIndex))
   }
 
@@ -182,57 +318,21 @@ object CandiaPipeline {
       result: CandiaResult,
       path: String,
       config: CandiaConfig = CandiaConfig()): Int = {
-    val intensityCutoffBin = config.intensityCutoffBin
-    import spark.implicits._
-    val bestKeys = result.bestModels
-      .select(col("swath_start_key"), col("rt_window"), col("ncomp"))
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
-      .toSet
-    // adjusted-window midpoints: the MS1-absent pseudo-precursor sits at
-    // (lower + upper) / 2 (id_models_concat.py:85-89), NOT at the lower
-    // bound
-    val centerOf: Map[String, Double] = result.peaks.toDF()
-      .select(col("swath_lower_adjusted"), col("swath_upper_adjusted"))
-      .distinct().collect()
-      .map { r =>
-        val lo = r.getFloat(0).toDouble
-        (graft.ms.ops.Tensorizer.swathKey(lo),
-          (lo + r.getFloat(1).toDouble) / 2.0)
-      }.toMap
-
-    // global scan ids for the best models' components only (filter the
-    // index on the cluster; the collected map stays |best|·F-sized)
-    val scanOf: Map[(Long, Int, Int, Long), Long] = result.spectrumIndex
-      .join(broadcast(result.bestModels
-          .select("swath_start", "rt_window", "ncomp").distinct()),
-        Seq("swath_start", "rt_window", "ncomp"))
-      .select("swath_start", "rt_window", "ncomp", "spectrum_num", "scan")
-      .collect()
-      .map(r => ((r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)),
-        r.getLong(4)))
-      .toMap
-
-    val comps = result.models
-      .filter((m: ParafacModelRow) =>
-        bestKeys.contains((m.swath_key, m.rt_window, m.ncomp)))
-      .collect()
-      .flatMap { m =>
-        val labels = m.mz_indices.map(graft.ms.ops.Tensorizer.parseLabel)
-        val lower = m.swath_key.toDouble
-        val cents = math.rint(lower * 100).toLong // half-even, like centsKey
-        val center = centerOf.getOrElse(m.swath_key, lower)
+    val comps = bestOf(spark, result)
+      .flatMap { b =>
+        val m = b.row
+        val labels = m.mz_indices.map(Tensorizer.parseLabel)
         (0 until m.ncomp).map { k =>
           MzXMLWriter.Component(
-            scanId = scanOf((cents, m.rt_window, m.ncomp, k.toLong)),
+            scanId = b.firstScan + k,
             points = labels.zipWithIndex.map { case ((lvl, mzv), i) =>
               (mzv, lvl, m.mass_mode(i * m.ncomp + k).toDouble)
             },
-            isolationWindowCenter = center)
+            isolationWindowCenter = b.isolationCentre)
         }
       }
       .sortBy(_.scanId)
-    MzXMLWriter.write(path, comps.toSeq, intensityCutoffBin)
+    MzXMLWriter.write(path, comps, config.intensityCutoffBin)
   }
 
   /** Stage 9 END-TO-END (the crux branch of id_models_concat.py:37-55):

@@ -2,6 +2,7 @@ package graft.ms
 
 import graft.SparkSuite
 import graft.ms.ops.Indexing
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -53,5 +54,21 @@ class IndexingSpec extends AnyFunSuite with Matchers with SparkSuite {
     val df = Seq(623.0, 639.495, 400.005).toDF("v")
       .select(Indexing.centsKey(org.apache.spark.sql.functions.col("v")).as("k"))
     df.collect().map(_.getLong(0)).sorted shouldBe Array(40000L, 62300L, 63950L)
+  }
+
+  test("driver-side cents equals centsKey, ties and shortest-decimal cases included") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    // half-cent ties (400.005, 412.125), values whose shortest decimal
+    // and exact binary round differently (2.675, 1.005, 0.285), float
+    // window bounds, and random 3-dp and float values
+    val vs = Seq(400.005, 412.125, 2.675, 1.005, 0.285, 639.495, 623.0,
+      412.125f.toDouble, 2.675f.toDouble, 639.495f.toDouble) ++
+      Seq.fill(500)(rnd.nextInt(1000000) / 1000.0) ++
+      Seq.fill(500)((300f + 1200f * rnd.nextFloat()).toDouble)
+    val got = vs.toDF("v")
+      .select(col("v"), Indexing.centsKey(col("v")).as("k"))
+      .collect().map(r => r.getDouble(0) -> r.getLong(1))
+    got.foreach { case (v, k) => withClue(v)(Indexing.cents(v) shouldBe k) }
   }
 }
