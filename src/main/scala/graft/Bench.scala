@@ -166,7 +166,9 @@ object Bench {
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
+               catch { case NonFatal(e) =>
+                 System.err.println(s"[bench] $name failed: $e"); false
+               }
       val dt = (System.nanoTime() - t0) / 1e9
       // first pass only: accumulating the rerun's GC into the same key
       // would show ~2× GC for whichever queries happened to be rerun,
@@ -500,7 +502,7 @@ object Bench {
             totalSteadyExBuilds)},"unit":"sec","n":${results.size},"queries":$qsAll,"rerun":$rerunPairs,"rerun_skipped":$rerunDropped,"sections":$sectionsJson,"builds":$buildsDetail,"gc_top":$gcTop,"gc_total_ms":$gcTotalMs,"storage_peak_mb":$storagePeakMb,"canary":$canaryJson,"sf":"$sfDir"}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
         (full + "\n").getBytes("UTF-8"))
-    } catch { case t: Throwable =>
+    } catch { case NonFatal(t) =>
       println(s"BENCH_FULL_WRITE_FAILED ${t.getClass.getSimpleName}: " +
         s"${t.getMessage} — $fullPath on disk is STALE")
     }
@@ -526,7 +528,7 @@ object Bench {
       }.mkString("{\n\"_sf\":\"" + sfDir + "\",\n", ",\n", "\n}")
       java.nio.file.Files.write(java.nio.file.Paths.get(HistoryPath),
         (hist + "\n").getBytes("UTF-8"))
-    } catch { case t: Throwable =>
+    } catch { case NonFatal(t) =>
       println(s"BENCH_HISTORY_WRITE_FAILED ${t.getClass.getSimpleName}: " +
         s"${t.getMessage} — $HistoryPath on disk is STALE")
     }

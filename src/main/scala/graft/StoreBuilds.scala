@@ -3,7 +3,9 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The session stage store and its build ledger — the in-session form
   * of the reference's on-disk inter-stage artifacts (slice tensors,
@@ -23,7 +25,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * scale-curve runs share one JVM) adds into the same key, which is
   * the right attribution for a one-session-runs-all harness. Builds
   * nest (models consume tensors): callers resolve the upstream store
-  * BEFORE their own, so no ledger entry contains another's build. */
+  * BEFORE their own, so no ledger entry contains another's build.
+  * [[resumable]] holds the durable (on-disk, append-mode) stores'
+  * resume policy. */
 object StoreBuilds {
   private val times = TrieMap.empty[String, Double]
 
@@ -88,6 +92,33 @@ object StoreBuilds {
       scratch.add(p)
       p.toString
     }).asInstanceOf[String]
+
+  /** The durable parquet store at `path`, read with its `schema`, or
+    * None when nothing exists there. A known schema costs no inference
+    * job, and a store whose first write was killed (a directory holding
+    * only `_temporary/`) reads back empty instead of failing to infer. */
+  def durable(s: SparkSession, path: String, schema: StructType): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    Option.when(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))(
+      s.read.schema(schema).parquet(path))
+  }
+
+  /** The one resume policy of the durable stage stores (the reference's
+    * file-existence DAG, `candia:6-68`, and `skip_completed`): `missing`
+    * gets the store's distinct `keys` (None before the first write),
+    * anti-joins its work list against them and returns only the missing
+    * rows, which are appended. Returns the whole store, read with
+    * `schema`, which the appended rows must carry. */
+  def resumable(s: SparkSession, path: String, schema: StructType, keys: Seq[String])(
+      missing: Option[DataFrame] => Dataset[_]): DataFrame = {
+    val done = durable(s, path, schema).map(_.select(keys.map(col): _*).distinct())
+    val todo = missing(done)
+    require(todo.schema.catalogString == schema.catalogString, // names and types
+      s"rows for the store at $path are ${todo.schema.catalogString}, " +
+        s"not ${schema.catalogString}")
+    todo.write.mode("append").parquet(path)
+    s.read.schema(schema).parquet(path)
+  }
 
   private def session(s: SparkSession): TrieMap[(String, String), Any] = {
     val sc = s.sparkContext

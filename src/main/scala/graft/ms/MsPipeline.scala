@@ -94,23 +94,6 @@ object MsPipeline extends QueryPack {
                             AND peaks.w_end = adj2.w_end
         GROUP BY 1, 2 ORDER BY 1, 2"""
 
-  /** Stages 2–3 applied: adjusted-window tagging + RT windowing, typed. */
-  private def adjustedPeaks(s: SparkSession, d: String): Dataset[AdjustedPeak] = {
-    import s.implicits._
-    val raw = rawPeaks(s, d)
-    val windows = WindowOps.adjustedWindows(raw)
-    WindowOps.assignRtWindows(
-      WindowOps.applyAdjustment(raw, windows), rtWindowSec)
-      .select(col("file"), col("spectrum_index"), col("level"),
-        col("rt").cast("float").as("rt"), col("mz").cast("float").as("mz"),
-        col("intensity").cast("float").as("intensity"),
-        col("prec_mz").cast("float").as("prec_mz"),
-        col("swath_lower_adjusted").cast("float").as("swath_lower_adjusted"),
-        col("swath_upper_adjusted").cast("float").as("swath_upper_adjusted"),
-        col("rt_window"))
-      .as[AdjustedPeak]
-  }
-
   // Tensorization and decomposition feed four downstream queries; the
   // registry runs each query independently, so materialize these stage
   // boundaries once per (session, dir) — the in-engine analog of the
@@ -122,7 +105,7 @@ object MsPipeline extends QueryPack {
   // test seam, exactly as the reference's .npy artifacts were.
   private[graft] def tensors(s: SparkSession, d: String): Dataset[SliceTensor] =
     graft.StoreBuilds.persisted(s, d, "ms_slice_tensors")(
-      TensorizeOp.tensorize(s, adjustedPeaks(s, d), mzTolPpm))
+      TensorizeOp.tensorize(s, WindowOps.slicePeaks(rawPeaks(s, d), rtWindowSec), mzTolPpm))
 
   private def models(s: SparkSession, d: String): Dataset[ParafacModelRow] = {
     val t = tensors(s, d)

@@ -1,10 +1,11 @@
 package graft.ms.ops
 
+import graft.StoreBuilds
 import graft.ms.{ParafacModelRow, SliceTensor}
 import graft.ms.linalg.{GaussianImpute, NNParafac}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Stage-5: non-negative PARAFAC over every (slice, F) pair.
@@ -124,13 +125,11 @@ object Decomposer {
       .coalesce(out, shuffle = true))
   }
 
-  /** The reference's `skip_completed` resume (decompose_parafac
-    * .py:74-76) over a durable model store: models persist as parquet at
-    * `modelStorePath`; a resumed run anti-joins the (slice, F) work list
-    * against the store's existing (swath_key, rt_window, ncomp) keys —
-    * distributed, no driver-side listing — decomposes only the
-    * remainder, and appends. After a partial failure at 100 TB only the
-    * missing decompositions recompute. Returns the full store. */
+  /** [[run]] over a durable model store at `modelStorePath`
+    * ([[StoreBuilds.resumable]]; the reference's `skip_completed`,
+    * decompose_parafac.py:74-76): only the (slice, F) units whose
+    * (swath_key, rt_window, ncomp) the store lacks are decomposed.
+    * Returns the full store. */
   def runResumable(
       spark: SparkSession,
       slices: Dataset[SliceTensor],
@@ -141,13 +140,9 @@ object Decomposer {
       tol: Double = 1e-7,
       seed: Long = 123L): Dataset[ParafacModelRow] = {
     import spark.implicits._
-    val storePath = new org.apache.hadoop.fs.Path(modelStorePath)
-    val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = Option.when(fs.exists(storePath))(spark.read.parquet(modelStorePath)
-      .select(col("swath_key"), col("rt_window"), col("ncomp"))
-      .distinct())
-    decomposeAll(spark, workList(spark, slices, fMin, fMax, done), maxIter, tol, seed)
-      .write.mode("append").parquet(modelStorePath)
-    spark.read.parquet(modelStorePath).as[ParafacModelRow]
+    StoreBuilds.resumable(spark, modelStorePath, Encoders.product[ParafacModelRow].schema,
+      Seq("swath_key", "rt_window", "ncomp")) { done =>
+      decomposeAll(spark, workList(spark, slices, fMin, fMax, done), maxIter, tol, seed)
+    }.as[ParafacModelRow]
   }
 }

@@ -1,8 +1,9 @@
 package graft.ms.ops
 
+import graft.StoreBuilds
 import graft.ms.{ComponentPeaks, ParafacModelRow}
 import graft.ms.linalg.RickerCwt
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -111,12 +112,10 @@ object Indexing {
     }
   }
 
-  /** Snakemake-parity resume for the CWT peak-count stage: counts
-    * persist as parquet at `countStorePath`; a resumed run anti-joins
-    * the model set against the store's (swath_key, rt_window, ncomp)
-    * keys, counts peaks only for the missing models, and appends —
-    * same shape as [[Decomposer.runResumable]]. Returns the full
-    * store. */
+  /** [[countTimeModePeaks]] over a durable count store at
+    * `countStorePath` ([[StoreBuilds.resumable]]): only the models whose
+    * (swath_key, rt_window, ncomp) the store lacks are counted. Returns
+    * the full store. */
   def countTimeModePeaksResumable(
       spark: SparkSession,
       models: Dataset[ParafacModelRow],
@@ -124,20 +123,13 @@ object Indexing {
       windowSizeSec: Double,
       countStorePath: String): Dataset[ComponentPeaks] = {
     import spark.implicits._
-    val storePath = new org.apache.hadoop.fs.Path(countStorePath)
-    val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val todo =
-      if (!fs.exists(storePath)) models
-      else {
-        val done = spark.read.parquet(countStorePath)
-          .select(col("swath_key"), col("rt_window"), col("ncomp"))
-          .distinct()
-        models.join(done, Seq("swath_key", "rt_window", "ncomp"),
-          "left_anti").as[ParafacModelRow]
-      }
-    countTimeModePeaks(spark, todo, avgPeakFwhmSec, windowSizeSec)
-      .write.mode("append").parquet(countStorePath)
-    spark.read.parquet(countStorePath).as[ComponentPeaks]
+    StoreBuilds.resumable(spark, countStorePath, Encoders.product[ComponentPeaks].schema,
+      Seq("swath_key", "rt_window", "ncomp")) { done =>
+      val todo = done.fold(models)(d =>
+        models.join(d, Seq("swath_key", "rt_window", "ncomp"), "left_anti")
+          .as[ParafacModelRow])
+      countTimeModePeaks(spark, todo, avgPeakFwhmSec, windowSizeSec)
+    }.as[ComponentPeaks]
   }
 
   /** Attach model_id to per-component peak counts via the model index. */

@@ -1,7 +1,8 @@
 package graft.ms.ops
 
+import graft.StoreBuilds
 import graft.ms.{AdjustedPeak, SliceTensor}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Spark wrapper for stage-4 tensorization: group the sliced peak table
   * by (swath_key, rt_window) and build one dense tensor per group.
@@ -34,36 +35,27 @@ object TensorizeOp {
       .flatMap(_.toOption)
   }
 
-  /** Snakemake-parity resume for the tensorize stage (the reference's
-    * file-existence DAG, `candia:29-44`, skips every slice whose tensor
-    * artifact exists): tensors persist as parquet at `tensorStorePath`;
-    * a resumed run anti-joins the peak table's slice keys against the
-    * store's existing (swath_key, rt_window) keys — distributed, no
-    * driver-side listing — tensorizes only the missing slices, and
-    * appends. After a partial failure at 100 TB only the missing slices
-    * re-read their peaks. Returns the full store. */
+  /** The tensorize stage over a durable tensor store at
+    * `tensorStorePath` ([[StoreBuilds.resumable]]; the reference skips
+    * every slice whose tensor file exists, `candia:29-44`): only the
+    * slices whose (swath_key, rt_window) the store lacks re-read their
+    * peaks and are tensorized. Returns the full store. */
   def tensorizeResumable(
       spark: SparkSession,
       peaks: Dataset[AdjustedPeak],
       mzTolPpm: Double,
       tensorStorePath: String): Dataset[SliceTensor] = {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val storePath = new org.apache.hadoop.fs.Path(tensorStorePath)
-    val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val todo =
-      if (!fs.exists(storePath)) peaks
-      else {
-        val done = spark.read.parquet(tensorStorePath)
-          .select(col("swath_key"), col("rt_window")).distinct()
+    StoreBuilds.resumable(spark, tensorStorePath, Encoders.product[SliceTensor].schema,
+      Seq("swath_key", "rt_window")) { done =>
+      val todo = done.fold(peaks) { d =>
         WindowOps.withSwathKey(peaks.toDF())
-          .join(done, Seq("swath_key", "rt_window"), "left_anti")
+          .join(d, Seq("swath_key", "rt_window"), "left_anti")
           .drop("swath_key")
           .as[AdjustedPeak]
       }
-    tensorize(spark, todo, mzTolPpm)
-      .write.mode("append").parquet(tensorStorePath)
-    spark.read.parquet(tensorStorePath).as[SliceTensor]
+      tensorize(spark, todo, mzTolPpm)
+    }.as[SliceTensor]
   }
 
   /** Per-slice tensorization failures (slice key → reason). */

@@ -1,7 +1,7 @@
 package graft.ms.ops
 
 import graft.ms.AdjustedPeak
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
@@ -70,6 +70,21 @@ object WindowOps {
   def assignRtWindows(peaks: DataFrame, windowSizeSec: Double): DataFrame =
     peaks.withColumn("rt_window",
       floor(col("rt") / lit(windowSizeSec)).cast("int"))
+
+  /** Stages 2–3 composed: `raw`'s isolation windows adjusted, each peak
+    * tagged with its adjusted window and RT window, in the
+    * [[AdjustedPeak]] columns. */
+  def slicePeaks(raw: DataFrame, windowSizeSec: Double): Dataset[AdjustedPeak] =
+    adjustedPeakColumns(
+      assignRtWindows(applyAdjustment(raw, adjustedWindows(raw)), windowSizeSec))
+
+  /** `peaks`' [[AdjustedPeak]] columns, cast to its types (the m/z, RT,
+    * intensity and window bounds are float32, as the reference stores
+    * them). */
+  def adjustedPeakColumns(peaks: DataFrame): Dataset[AdjustedPeak] = {
+    val enc = Encoders.product[AdjustedPeak]
+    peaks.select(enc.schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*).as(enc)
+  }
 
   /** Persist the adjusted-window table as the reference's sorted 2-column
     * CSV (save_isolation_windows_to_csv, msproc.py:568-574) — a tiny

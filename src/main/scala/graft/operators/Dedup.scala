@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 import graft.{GraftQuery, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -437,16 +438,26 @@ object Dedup extends QueryPack {
     * label; BigInt — no overflow at any corpus size). */
   private[operators] def minLabelComponents(rawPairs: DataFrame)
       : org.apache.spark.rdd.RDD[(Long, Long)] = {
+    // every RDD the rounds persist: the caller never receives them if a
+    // round throws, so they are released here
+    val held = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.rdd.RDD[(Long, Long)]]
+    try minLabelRounds(rawPairs, r => { held += r; r.persist() })
+    catch { case t: Throwable => held.foreach(_.unpersist()); throw t }
+  }
+
+  private def minLabelRounds(rawPairs: DataFrame,
+      hold: org.apache.spark.rdd.RDD[(Long, Long)] => org.apache.spark.rdd.RDD[(Long, Long)])
+      : org.apache.spark.rdd.RDD[(Long, Long)] = {
     val s = rawPairs.sparkSession
     import s.implicits._
     val nParts = 8 // label tables are O(near-dup docs) — tiny vs corpus
     val part = new org.apache.spark.HashPartitioner(nParts)
-    val edges = rawPairs
+    val edges = hold(rawPairs
       .select(col("d1").cast("long"), col("d2").cast("long"))
       .as[(Long, Long)].rdd
       .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(part)
-      .persist()
+      .partitionBy(part))
     // Seed each node with min(SELF, neighbors) — the first propagation
     // round fused into initialization (min-of-neighbors alone costs one
     // extra confirmation round: the component-min node only learns its
@@ -454,27 +465,23 @@ object Dedup extends QueryPack {
     // preservesPartitioning: keys are untouched, so the reduce is
     // shuffle-free on `part` and labels are co-partitioned with edges
     // from the start.
-    var labels = edges
+    var labels = hold(edges
       .mapPartitions(
         _.map { case (u, v) => (u, math.min(u, v)) },
         preservesPartitioning = true)
-      .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      .persist()
+      .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)))
     def labelSum(r: org.apache.spark.rdd.RDD[(Long, Long)]): BigInt =
       r.map(kv => BigInt(kv._2)).fold(BigInt(0))(_ + _)
     var prevSum = labelSum(labels)
-    if (sys.env.contains("GRAFT_CC_TRACE"))
-      println(f"[cc] init done at ${System.nanoTime() / 1e9}%.2f")
     var changed = true
     while (changed) {
       // one-hop min-label propagation: edges ⋈ labels is a one-side
       // shuffle-free join (both sides carry `part`), then the min
       // fold shuffles only the |labels|-sized candidate stream
-      val prop = edges.join(labels)
+      val prop = hold(edges.join(labels)
         .map { case (_, (dst, lab)) => (dst, lab) }
         .union(labels)
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        .persist()
+        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)))
       val propSum = labelSum(prop)
       if (propSum == prevSum) {
         // fixpoint: skip the pointer-jump join entirely (the common
@@ -490,19 +497,16 @@ object Dedup extends QueryPack {
         // O(log diameter). The lookup join always matches (labels
         // cover every graph node) and only ever lowers a label, so
         // the fixpoint (component min) is unchanged.
-        val next = prop
+        val next = hold(prop
           .map { case (n, l) => (l, n) }
           .join(prop)
           .map { case (_, (n, l2)) => (n, l2) }
-          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-          .persist()
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)))
         prevSum = labelSum(next)
         prop.unpersist()
         labels.unpersist()
         labels = next
       }
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        println(f"[cc] round done at ${System.nanoTime() / 1e9}%.2f")
     }
     edges.unpersist()
     labels
@@ -642,35 +646,28 @@ object Dedup extends QueryPack {
       .distinct()
   }
 
-  /** Snakemake-parity resumable band-index store — the dedup analog of
-    * the ms chain's tensor/model/count stores: band rows persist as
-    * parquet at `storePath`; a resumed run anti-joins the doc set
-    * against the store's doc_ids, bands ONLY the missing documents, and
-    * appends. At 100 TB this is how the signature index actually lives —
-    * materialized once per ingestion batch, never recomputed for the
-    * docs already indexed; each day's work is O(batch). Returns the full
+  /** The band-index store at `storePath` ([[graft.StoreBuilds.resumable]]
+    * keyed by doc_id): only the documents it lacks are banded, so each
+    * ingestion batch costs O(batch), never a rebuild. Returns the full
     * store. */
   private[graft] def bandIndexResumable(
       s: SparkSession, docs: DataFrame, storePath: String): DataFrame = {
     import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val fresh =
-      if (!fs.exists(p)) docs
-      else {
-        val done = s.read.parquet(storePath).select("doc_id").distinct()
-        docs.join(done, Seq("doc_id"), "left_anti")
-      }
-    // WITHIN-batch dedup too: a re-delivered file landing next to the
-    // original before the trigger fires puts the same doc in one batch
-    // twice; the store anti-join can't see that, and a double-banded doc
-    // would corrupt the profile permanently
-    val todo = fresh.dropDuplicates("doc_id")
-    minhashBandRows(shingleSets(todo).as[(Long, Seq[String])])
-      .toDF("doc_id", "band", "key")
-      .write.mode("append").parquet(storePath)
-    s.read.parquet(storePath)
+    graft.StoreBuilds.resumable(s, storePath, bandSchema, Seq("doc_id")) { done =>
+      val fresh = done.fold(docs)(docs.join(_, Seq("doc_id"), "left_anti"))
+      // WITHIN-batch dedup too: a re-delivered file landing next to the
+      // original before the trigger fires puts the same doc in one batch
+      // twice; the store anti-join can't see that, and a double-banded
+      // doc would corrupt the profile permanently
+      val todo = fresh.dropDuplicates("doc_id")
+      minhashBandRows(shingleSets(todo).as[(Long, Seq[String])])
+        .toDF("doc_id", "band", "key")
+    }
   }
+
+  /** The band-index store's rows: (doc_id, band, key). */
+  private[graft] val bandSchema: StructType = StructType.fromDDL(
+    "doc_id BIGINT, band INT, key STRING")
 
   /** The per-band index profile (rows, distinct keys, largest bucket)
     * over band rows — ONE implementation consumed by both the batch
@@ -1784,7 +1781,12 @@ object Dedup extends QueryPack {
         val edges = exPairs.unionByName(urlPairs).unionByName(nearPairs)
           .distinct()
         import s.implicits._
-        val labels = minLabelComponents(edges).toDF("doc_id", "canonical_id")
+        // one row per doc in any duplicate group: collect, then release
+        // the label RDD, as q_dedup_cluster does
+        val cc = minLabelComponents(edges)
+        val labels =
+          try cc.collect().toSeq.toDF("doc_id", "canonical_id")
+          finally cc.unpersist()
         val comp = labels.groupBy(col("canonical_id").as("cid"))
           .agg(count(lit(1)).as("nc"))
         docs.select(col("doc_id"))

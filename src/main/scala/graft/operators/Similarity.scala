@@ -4,6 +4,7 @@ import graft.{GraftQuery, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: Array[Float]`, 64-dim).
@@ -190,21 +191,21 @@ object Similarity extends QueryPack {
     * vec_ids (plus WITHIN-batch dedup — a re-delivered vector must not
     * be assigned twice), assign only the missing vectors to their
     * nearest integer-grid centroid (L2 on the 1e-6 grid, ties to the
-    * smaller label), append, return the full store. `allVecs` supplies
-    * the centroid basis and must be the full corpus; `batch` is the
-    * increment to index. */
+    * smaller label), append, return the full store
+    * ([[graft.StoreBuilds.resumable]]). `allVecs` supplies the centroid
+    * basis and must be the full corpus; `batch` is the increment to
+    * index. */
   private[operators] def ivfAssignResumable(
       s: SparkSession, allVecs: DataFrame, batch: DataFrame,
-      storePath: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val fresh =
-      if (!fs.exists(p)) batch
-      else batch.join(
-        s.read.parquet(storePath).select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti")
-    val todo = fresh.dropDuplicates("vec_id")
+      storePath: String): DataFrame =
+    graft.StoreBuilds.resumable(s, storePath, ivfSchema, Seq("vec_id")) { done =>
+      ivfAssign(allVecs,
+        done.fold(batch)(batch.join(_, Seq("vec_id"), "left_anti")).dropDuplicates("vec_id"))
+    }
+
+  /** (vec_id, list): each vector of `todo` assigned to its nearest
+    * integer-grid centroid of `allVecs`. */
+  private def ivfAssign(allVecs: DataFrame, todo: DataFrame): DataFrame = {
     def grid(df: DataFrame, key: String) =
       df.select(col(key), posexplode(col("v")).as(Seq("i", "x")))
         .select(col(key), col("i"),
@@ -222,10 +223,11 @@ object Similarity extends QueryPack {
         .as("d2"))
       .groupBy(col("vec_id"))
       .agg(min(struct(col("d2"), col("c_label"))).as("m"))
-      .select(col("vec_id"), col("m.c_label").as("list"))
-      .write.mode("append").parquet(storePath)
-    s.read.parquet(storePath)
+      .select(col("vec_id"), col("m.c_label").cast("int").as("list"))
   }
+
+  /** The IVF-assignment store's rows: (vec_id, list). */
+  private val ivfSchema = StructType.fromDDL("vec_id BIGINT, list INT")
 
   /** Per-list index profile over store rows (vec_id, list) — the
     * index-health table an operator reads before sizing nprobe. */

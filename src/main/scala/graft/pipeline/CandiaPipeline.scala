@@ -77,23 +77,10 @@ object CandiaPipeline {
   def ingest(
       spark: SparkSession,
       mzmlFiles: Seq[String],
-      config: CandiaConfig): Dataset[AdjustedPeak] = {
-    import spark.implicits._
-    val raw = MzMLSource.read(spark, mzmlFiles,
-      minIntensity = config.minScanIntensity).toDF()
-    val windows = WindowOps.adjustedWindows(raw)
-    WindowOps.assignRtWindows(
-      WindowOps.applyAdjustment(raw, windows), config.windowSizeSec)
-      .select(col("file"), col("spectrum_index"), col("level"),
-        col("rt").cast("float").as("rt"),
-        col("mz").cast("float").as("mz"),
-        col("intensity").cast("float").as("intensity"),
-        col("prec_mz").cast("float").as("prec_mz"),
-        col("swath_lower_adjusted").cast("float").as("swath_lower_adjusted"),
-        col("swath_upper_adjusted").cast("float").as("swath_upper_adjusted"),
-        col("rt_window"))
-      .as[AdjustedPeak]
-  }
+      config: CandiaConfig): Dataset[AdjustedPeak] =
+    WindowOps.slicePeaks(
+      MzMLSource.read(spark, mzmlFiles, minIntensity = config.minScanIntensity).toDF(),
+      config.windowSizeSec)
 
   /** Persist the sliced peak table to its partitioned layout and read it
     * back — the durable stage-3/4 boundary (the reference's slice
@@ -103,14 +90,8 @@ object CandiaPipeline {
       spark: SparkSession,
       peaks: Dataset[AdjustedPeak],
       path: String): Dataset[AdjustedPeak] = {
-    import spark.implicits._
     WindowOps.writeSlices(WindowOps.withSwathKey(peaks.toDF()), path)
-    WindowOps.readSlices(spark, path)
-      .select(col("file"), col("spectrum_index"), col("level"),
-        col("rt"), col("mz"), col("intensity"), col("prec_mz"),
-        col("swath_lower_adjusted"), col("swath_upper_adjusted"),
-        col("rt_window"))
-      .as[AdjustedPeak]
+    WindowOps.adjustedPeakColumns(WindowOps.readSlices(spark, path))
   }
 
   /** Stages 1–8: mzML files → models + best-model selection (stages

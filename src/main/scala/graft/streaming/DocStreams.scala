@@ -269,16 +269,10 @@ object DocStreams extends QueryPack {
         // a zero-file (or zero-row) source may fire no batch at all, so
         // the store was never created — an empty corpus is an empty
         // profile, not a read error
-        val p = new org.apache.hadoop.fs.Path(store)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val rows =
-          if (!fs.exists(p))
-            s.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              StructType(Seq(StructField("doc_id", LongType),
-                StructField("band", IntegerType),
-                StructField("key", StringType))))
-          else s.read.parquet(store)
+        val rows = graft.StoreBuilds.durable(s, store, Dedup.bandSchema)
+          .getOrElse(s.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            Dedup.bandSchema))
         Dedup.bandIndexProfile(rows)
       },
       oracle = Some(s"""

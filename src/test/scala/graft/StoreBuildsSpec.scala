@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -71,6 +75,64 @@ class StoreBuildsSpec extends AnyFunSuite with Matchers with SparkSuite {
     builds shouldBe 1
     StoreBuilds.snapshot.toMap.apply("spec_hit") shouldBe after1
     StoreBuilds.clear()
+  }
+
+  /** Spark jobs started by `body` on this thread outside a SQL
+    * execution: a DataFrame action's jobs carry its execution id, a
+    * parquet schema inference's jobs do not. */
+  private def jobsOutsideSql(body: => Unit): Int = {
+    val tag = "graft.test.jobs"
+    val id = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty(tag) == id && p.getProperty("spark.sql.execution.id") == null))
+          started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, id)
+    try {
+      body
+      // listener delivery is async: wait until the count stops moving
+      var prev = -1
+      while (prev != started.get) { prev = started.get; Thread.sleep(300) }
+      started.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("resumable appends only the missing rows and reads the store with its schema") {
+    val path = java.nio.file.Files.createTempDirectory("graft-resumable").toString + "/store"
+    val schema = StructType.fromDDL("id BIGINT, v STRING")
+    def upTo(n: Long)(done: Option[DataFrame]): DataFrame = {
+      val all = spark.range(n).select(col("id"), col("id").cast("string").as("v"))
+      done.fold(all)(all.join(_, Seq("id"), "left_anti"))
+    }
+    var seen = Seq.empty[Option[Long]]
+    def run(n: Long): DataFrame =
+      StoreBuilds.resumable(spark, path, schema, Seq("id")) { done =>
+        seen :+= done.map(_.count())
+        upTo(n)(done)
+      }
+    run(3).count() shouldBe 3
+    val back = run(5)
+    back.count() shouldBe 5
+    back.select("id").distinct().count() shouldBe 5
+    seen shouldBe Seq(None, Some(3L))
+    // the read-back schema is the one the files carry
+    back.schema shouldBe spark.read.parquet(path).schema
+    // a resume over a complete store runs its append and nothing else:
+    // neither the key read nor the read-back infers a schema
+    jobsOutsideSql(run(5).count() shouldBe 5) shouldBe 0
+    // the counter sees an inference: a schema-less read runs one
+    jobsOutsideSql(spark.read.parquet(path)) should be >= 1
+    an[IllegalArgumentException] should be thrownBy
+      StoreBuilds.resumable(spark, path, schema, Seq("id"))(_ => spark.range(1).toDF())
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path).getParentFile)
   }
 
   test("a stopped session's stores are gone") {

@@ -60,6 +60,24 @@ class MsResumeSpec extends AnyFunSuite with Matchers with SparkSuite {
       new java.io.File(store).getParentFile)
   }
 
+  test("a tensor store whose first write was killed resumes and reads back complete") {
+    import spark.implicits._
+    val store = java.nio.file.Files
+      .createTempDirectory("graft-tensors").toString + "/store"
+    // a killed first write leaves the committer's `_temporary/` (here
+    // with a task attempt's partial file) and no committed data file
+    val attempt = new java.io.File(store, "_temporary/0/_temporary/attempt_0")
+    attempt.mkdirs() shouldBe true
+    java.nio.file.Files.write(new java.io.File(attempt, "part-00000.parquet").toPath,
+      "PAR1".getBytes("UTF-8"))
+    val all = (slicePeaks(0) ++ slicePeaks(1)).toDS()
+    TensorizeOp.tensorizeResumable(spark, all, 2000.0, store)
+      .collect().map(t => (t.swath_key, t.rt_window)).sorted shouldBe
+      Array(("400.00", 0), ("400.00", 1))
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(store).getParentFile)
+  }
+
   test("CandiaPipeline.run with all three stores is a no-op on re-run") {
     val scanDir = "/root/reference/test/test_experiment/samples/scans_mzml"
     val files = Seq(s"$scanDir/scan1.mzML", s"$scanDir/scan2.mzML")

@@ -76,8 +76,21 @@ class CacheHygieneSpec extends AnyFunSuite with Matchers with SparkSuite {
     // dedup_shingle_rows, dedup_shingle_sets, dedup_pair_counts,
     // dedup_near_pairs, and dedup_prefix_index (two RDDs: the prefix
     // rows and the per-doc set arrays)
-    assertStoresStable(
-      Seq("q_dedup_cluster", "q_dedup_ppjoin", "q_dedup_lsh_eval"), 6)
+    assertStoresStable(Seq("q_dedup_cluster", "q_dedup_ppjoin",
+      "q_dedup_lsh_eval", "q_dedup_keep_list"), 6)
+  }
+
+  test("minLabelComponents releases its RDDs when a round throws") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val boom = udf { (d: Long) =>
+      if (d > 1) throw new IllegalStateException("boom"); d
+    }
+    // a range, not a local Seq: the optimizer would evaluate the udf over
+    // local rows while planning, before any RDD is persisted
+    val pairs = spark.range(1, 3).select(col("id").as("d1"), boom(col("id") + 1).as("d2"))
+    val before = persistedIds
+    intercept[Exception](Dedup.minLabelComponents(pairs))
+    persistedIds shouldBe before
   }
 
   test("ms queries leave only their stage stores, the same set on a rerun") {
