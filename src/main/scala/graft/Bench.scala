@@ -14,13 +14,10 @@ object Bench {
     "SPARK_GRAFT_HISTORY", "BENCH_HISTORY.json")
 
   /** Single-parse read of the history file: (`_sf` stamp, raw
-    * per-query samples). ONE I/O pass feeds BOTH the criterion read
-    * and the write-skip guard in main, so the two can never see
-    * different stamps (the old shape re-read the file at write time —
-    * a second parse and a TOCTOU window). Only expected failures
-    * (missing/corrupt file) degrade to empty; fatal JVM errors (OOM,
-    * interrupts) propagate — swallowing them would silently run the
-    * bench with degraded thresholds on a dying JVM. */
+    * per-query samples). Only expected failures (missing/corrupt file)
+    * degrade to empty; fatal JVM errors (OOM, interrupts) propagate —
+    * swallowing them would silently run the bench with degraded
+    * thresholds on a dying JVM. */
   private[graft] def readHistoryRaw(
       path: String): (Option[String], Map[String, List[Double]]) =
     try {
@@ -49,31 +46,26 @@ object Bench {
       // a corrupt history must not kill the bench; the criterion just
       // falls back to 2 s flat
 
+  /** The samples, and whether the file is stamped for another sf. */
+  private[graft] final case class History(
+      samples: Map[String, List[Double]], foreignSf: Boolean)
+
   /** Reads the history, REJECTING a file stamped with a different
     * scale factor: medians only mean something against the same data,
     * and one forgotten SPARK_GRAFT_HISTORY on a sf0.01 smoke run must
-    * not pollute the committed sf0.1 baseline (the `_sf` stamp is the
-    * structural guard; the SKILL.md note is just the courtesy copy).
-    * An unstamped legacy file is accepted as-is.
-    * (private[graft] + explicit path so BenchHistorySpec pins the
-    * contract on temp files — this function guards the committed
-    * baseline every future round's criterion reads. main itself uses
-    * [[readHistoryRaw]] directly so the read guard and the write-skip
-    * guard derive from one parse.) */
-  private[graft] def readHistory(
-      path: String, sfDir: String): Map[String, List[Double]] = {
+    * not pollute the committed sf0.1 baseline. A rejected file reads as
+    * no samples and `foreignSf`, which main's write-skip guard reads,
+    * so the criterion and the guard share one parse. An unstamped
+    * legacy file is accepted as-is. */
+  private[graft] def readHistory(path: String, sfDir: String): History = {
     val (stamp, samples) = readHistoryRaw(path)
     if (stamp.exists(_ != sfDir)) {
       println(s"BENCH_HISTORY_SF_MISMATCH file=${stamp.get} " +
         s"run=$sfDir — ignoring history (thresholds fall back " +
         "to 2 s flat); the file will NOT be overwritten")
-      Map.empty
-    } else samples
+      History(Map.empty, foreignSf = true)
+    } else History(samples, foreignSf = false)
   }
-
-  /** The `_sf` stamp of a history file, if present and parseable. */
-  private[graft] def historyStamp(path: String): Option[String] =
-    readHistoryRaw(path)._1
 
   private[graft] def median(vs: List[Double]): Double = {
     val s = vs.sorted
@@ -130,7 +122,7 @@ object Bench {
     // packs): these are DIAGNOSTIC ratios, never used to adjust any
     // number. RAW probe seconds are recorded here; ratios are computed
     // at REPORT time against the minimum probe seen across the whole
-    // run (start probe included) — the BenchScale lesson applied:
+    // run (start probe included) — the scale-curve lesson applied:
     // dividing by a single start-of-run sample lets a loaded or
     // hiccuped startup deflate every section ratio and mask exactly
     // the mid-run window the feature exists to catch.
@@ -153,8 +145,7 @@ object Bench {
     // that triggered it (via the StoreBuilds ledger) — so a
     // round-over-round regression decomposes into (own work, GC share,
     // store builds it happened to trigger) instead of standing
-    // unexplained.
-    def gcMillis(): Long = graft.sparkutil.JvmGc.millis()
+    // unexplained. All of it is read off the query's Metrics record.
     val gcByQuery = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val buildsBy = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, String)] // store -> (secs, triggering query)
@@ -162,30 +153,25 @@ object Bench {
     var storagePeakAt = ""
     def time(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
-      val builds0 = StoreBuilds.snapshot.toMap
-      val gc0 = gcMillis()
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case NonFatal(e) =>
-                 System.err.println(s"[bench] $name failed: $e"); false
-               }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (ok, m) = Metrics.measure(spark) {
+        try { fn(spark, sfDir).count(); true }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e"); false
+        }
+      }
       // first pass only: accumulating the rerun's GC into the same key
       // would show ~2× GC for whichever queries happened to be rerun,
       // skewing the gc_top decomposition round-over-round
-      if (!gcByQuery.contains(name)) gcByQuery(name) = gcMillis() - gc0
-      StoreBuilds.snapshot.foreach { case (store, secs) =>
-        val delta = secs - builds0.getOrElse(store, 0.0)
+      if (!gcByQuery.contains(name)) gcByQuery(name) = m.gcMs
+      m.builds.foreach { case (store, delta) =>
         if (delta > 0.001 && !buildsBy.contains(store))
           buildsBy(store) = (delta, name)
       }
-      val cachedMb = spark.sparkContext.getRDDStorageInfo
-        .map(_.memSize).sum >> 20
-      if (cachedMb > storagePeakMb) {
-        storagePeakMb = cachedMb
+      if (m.cachedMb > storagePeakMb) {
+        storagePeakMb = m.cachedMb
         storagePeakAt = name
       }
-      if (ok) dt else -1.0
+      if (ok) m.wallS else -1.0
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     var prevSection = ""
@@ -240,18 +226,7 @@ object Bench {
         n == "q_dedup_ppjoin" || // first consumer: builds the prefix-index store
         n == "q_graph_hits" || // first consumer: builds the trade-edge store
         n == "q_sim_ivfpq" // memoized index build: a rerun hits the memo
-    // ONE parse of the history file; the criterion read and the
-    // write-skip guard both derive from it (no second I/O, no TOCTOU
-    // window between the two guards seeing different stamps)
-    val (histStamp, histRaw) = readHistoryRaw(HistoryPath)
-    val stampMismatch = histStamp.exists(_ != sfDir)
-    val history: Map[String, List[Double]] =
-      if (stampMismatch) {
-        println(s"BENCH_HISTORY_SF_MISMATCH file=${histStamp.get} " +
-          s"run=$sfDir — ignoring history (thresholds fall back " +
-          "to 2 s flat); the file will NOT be overwritten")
-        Map.empty
-      } else histRaw
+    val History(history, stampMismatch) = readHistory(HistoryPath, sfDir)
     // r8 verdict directive #2: these four recorded 2.6–4.5× single-
     // sample moves in untouched code below the old top-10 cut; they
     // get an unconditional second sample this round (and hereafter —
@@ -488,8 +463,6 @@ object Bench {
     // diverts to a side file (same footgun class the _sf stamp
     // guards): a smoke run at another scale factor must not clobber
     // the committed sf0.1 artifact either.
-    // stampMismatch comes from the SAME parse the criterion read used
-    // (no second I/O, no TOCTOU between the two guards)
     val fullPath =
       if (HistoryPath != "BENCH_HISTORY.json")
         HistoryPath.stripSuffix(".json") + "_full.json"

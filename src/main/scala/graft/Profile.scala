@@ -6,8 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
-import graft.sparkutil.JvmGc
-
 /** Dev tool: profile registry queries in one Bench-shaped session (the
   * same confs, fixed alphabetical order and `.count()` action).
   *
@@ -16,11 +14,12 @@ import graft.sparkutil.JvmGc
   *
   * Names may be exact or prefixes (`q_stream_` runs the pack). Per query
   * and rep it prints the wall-clock (rep 1 includes scan and store
-  * warm-up; later reps isolate the query's own cost), rows, persisted
-  * RDDs, cached MB, GC, heap and shuffle bytes, then the store builds
-  * that run timed; per rep, the total over the queries that did not
-  * fail. A streaming query also prints every micro-batch's duration
-  * breakdown and state-store metrics.
+  * warm-up; later reps isolate the query's own cost), rows, Spark jobs
+  * and tasks, persisted RDDs, cached MB, GC, heap and shuffle bytes,
+  * then the store builds that run timed, all but the persisted RDDs
+  * read off its [[Metrics]] record; per rep, the total over the
+  * queries that did not fail. A streaming query also prints every
+  * micro-batch's duration breakdown and state-store metrics.
   *   - `k=v`: session conf overrides, static confs included;
   *   - `pre`: first replay every registry query that sorts before the
   *     first chosen one, so the session is as old as in Bench at that
@@ -69,27 +68,18 @@ object Profile {
     (1 to reps).foreach { r =>
       var total = 0.0
       chosen.foreach { case (name, q) =>
-        StoreBuilds.clear()
-        val g0 = JvmGc.millis()
-        val t0 = System.nanoTime()
-        var rows: Option[Long] = None
-        val vol = ShuffleMeter.measure(spark) { rows = count(name, q) }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val sc = spark.sparkContext
-        val mb = sc.getRDDStorageInfo.map(_.memSize).sum >> 20
-        val rt = Runtime.getRuntime
-        val heapMb = (rt.totalMemory - rt.freeMemory) >> 20
+        val (rows, m) = Metrics.measure(spark)(count(name, q))
         rows.foreach { n =>
-          total += dt
-          println(f"[profile] $name rep $r: $dt%.2f s ($n rows, " +
-            s"${sc.getPersistentRDDs.size} persistent RDDs, $mb MB cached, " +
-            s"gc ${JvmGc.millis() - g0} ms, heap $heapMb MB, shuffle " +
-            s"w ${vol.shuffleWrite >> 10} KiB / r ${vol.shuffleRead >> 10} KiB)")
+          total += m.wallS
+          println(f"[profile] $name rep $r: ${m.wallS}%.2f s ($n rows, " +
+            s"${m.jobs} jobs, ${m.tasks} tasks, " +
+            s"${spark.sparkContext.getPersistentRDDs.size} persistent RDDs, " +
+            s"${m.cachedMb} MB cached, gc ${m.gcMs} ms, heap ${m.heapMb} MB, " +
+            s"shuffle w ${m.shuffleWrite >> 10} KiB / r ${m.shuffleRead >> 10} KiB)")
         }
-        val builds = StoreBuilds.snapshot
-        if (builds.nonEmpty)
-          println("[profile] builds: " +
-            builds.map { case (k, v) => f"$k=$v%.2f" }.mkString(", "))
+        if (m.builds.nonEmpty)
+          println("[profile] builds: " + m.builds.toSeq.sortBy(-_._2)
+            .map { case (k, v) => f"$k=$v%.2f" }.mkString(", "))
       }
       println(f"[profile] TOTAL rep $r: $total%.2f s over " +
         s"${chosen.size} queries")

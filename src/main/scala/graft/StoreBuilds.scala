@@ -21,9 +21,9 @@ import org.apache.spark.sql.types.StructType
   * pays the build" misattribution that made q_dedup_cluster read as
   * 5.6 s when the query proper is well under the 5 s bar. Only the
   * build (a miss) is timed; hits never touch the ledger. Cumulative
-  * per store name: a store rebuilt for a second dataset dir (bench +
-  * scale-curve runs share one JVM) adds into the same key, which is
-  * the right attribution for a one-session-runs-all harness. Builds
+  * per store name: a store rebuilt for a second dataset dir adds into
+  * the same key; [[Metrics]] reads a body's builds as the ledger's
+  * growth over it. Builds
   * nest (models consume tensors): callers resolve the upstream store
   * BEFORE their own, so no ledger entry contains another's build.
   * [[resumable]] holds the durable (on-disk, append-mode) stores'

@@ -29,8 +29,15 @@ class BenchHistorySpec extends AnyFunSuite with Matchers {
   test("a stamp mismatch ignores the file; a match reads it") {
     val path = tempWith(
       """{"_sf":"/data/sf0.1","q_a":[1.0,2.0],"q_b":[0.5]}""")
-    Bench.readHistory(path, "/data/sf0.01") shouldBe empty
-    val ok = Bench.readHistory(path, "/data/sf0.1")
+    val foreign = Bench.readHistory(path, "/data/sf0.01")
+    foreign.samples shouldBe empty
+    // main skips BOTH write-backs when the committed file is stamped
+    // for another sf — ignoring it on read but restamping on write
+    // would destroy the baseline anyway
+    foreign.foreignSf shouldBe true
+    val read = Bench.readHistory(path, "/data/sf0.1")
+    read.foreignSf shouldBe false
+    val ok = read.samples
     ok("q_a") shouldBe List(1.0, 2.0)
     ok("q_b") shouldBe List(0.5)
     ok should not contain key("_sf")
@@ -38,21 +45,21 @@ class BenchHistorySpec extends AnyFunSuite with Matchers {
 
   test("an unstamped legacy file is accepted at any scale factor") {
     val path = tempWith("""{"q_a":[3.25]}""")
-    Bench.readHistory(path, "/anything")("q_a") shouldBe List(3.25)
+    Bench.readHistory(path, "/anything").samples("q_a") shouldBe List(3.25)
   }
 
   test("corrupt or missing history is empty, never an exception") {
     Bench.readHistory(tempWith("""not json at all {{{"""),
-      "/data/sf0.1") shouldBe empty
+      "/data/sf0.1").samples shouldBe empty
     Bench.readHistory("/nonexistent/path/hist.json",
-      "/data/sf0.1") shouldBe empty
+      "/data/sf0.1").samples shouldBe empty
     // top-level non-object parses but carries no entries
-    Bench.readHistory(tempWith("""[1, 2, 3]"""), "/x") shouldBe empty
+    Bench.readHistory(tempWith("""[1, 2, 3]"""), "/x").samples shouldBe empty
   }
 
   test("integer-typed samples read as doubles (hand-edited files)") {
     val path = tempWith("""{"_sf":"/d","q_a":[1, 2.5]}""")
-    Bench.readHistory(path, "/d")("q_a") shouldBe List(1.0, 2.5)
+    Bench.readHistory(path, "/d").samples("q_a") shouldBe List(1.0, 2.5)
   }
 
   test("readHistoryRaw returns stamp AND samples from one parse") {
@@ -62,19 +69,10 @@ class BenchHistorySpec extends AnyFunSuite with Matchers {
     val (stamp, samples) = Bench.readHistoryRaw(path)
     stamp shouldBe Some("/d/sf0.1")
     samples("q_a") shouldBe List(1.0, 2.0)
+    Bench.readHistoryRaw(tempWith("""{"q_a":[1.0]}""")) shouldBe
+      (None, Map("q_a" -> List(1.0)))
     Bench.readHistoryRaw("/nonexistent/h.json") shouldBe (None, Map.empty)
     Bench.readHistoryRaw(tempWith("junk{{")) shouldBe (None, Map.empty)
-  }
-
-  test("historyStamp surfaces the _sf field for the write-skip guard") {
-    // main skips BOTH write-backs when the committed file is stamped
-    // for another sf — ignoring it on read but restamping on write
-    // would destroy the baseline anyway
-    Bench.historyStamp(tempWith("""{"_sf":"/d/sf0.1","q_a":[1.0]}""")) shouldBe
-      Some("/d/sf0.1")
-    Bench.historyStamp(tempWith("""{"q_a":[1.0]}""")) shouldBe None
-    Bench.historyStamp("/nonexistent/hist.json") shouldBe None
-    Bench.historyStamp(tempWith("garbage{{")) shouldBe None
   }
 
   test("median: odd picks middle, even averages, empty is NaN") {

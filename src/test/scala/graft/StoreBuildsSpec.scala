@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -77,33 +76,11 @@ class StoreBuildsSpec extends AnyFunSuite with Matchers with SparkSuite {
     StoreBuilds.clear()
   }
 
-  /** Spark jobs started by `body` on this thread outside a SQL
-    * execution: a DataFrame action's jobs carry its execution id, a
-    * parquet schema inference's jobs do not. */
-  private def jobsOutsideSql(body: => Unit): Int = {
-    val tag = "graft.test.jobs"
-    val id = java.util.UUID.randomUUID().toString
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty(tag) == id && p.getProperty("spark.sql.execution.id") == null))
-          started.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, id)
-    try {
-      body
-      // listener delivery is async: wait until the count stops moving
-      var prev = -1
-      while (prev != started.get) { prev = started.get; Thread.sleep(300) }
-      started.get
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Spark jobs started by `body` outside a SQL execution: a
+    * DataFrame action's jobs carry its execution id, a parquet schema
+    * inference's jobs do not. */
+  private def jobsOutsideSql(body: => Unit): Int =
+    Metrics.measure(spark)(body)._2.jobsOutsideSql
 
   test("resumable appends only the missing rows and reads the store with its schema") {
     val path = java.nio.file.Files.createTempDirectory("graft-resumable").toString + "/store"

@@ -99,4 +99,25 @@ class CacheHygieneSpec extends AnyFunSuite with Matchers with SparkSuite {
     assertStoresStable(
       Seq("q_ms_tensorize", "q_ms_decompose", "q_ms_best_models"), 3)
   }
+
+  private def pack(prefix: String): Seq[String] =
+    SparkEntry.queries.keys.filter(_.startsWith(prefix)).toSeq.sorted
+
+  test("text queries leave no persisted RDDs of their own, the same on a rerun") {
+    assume(new java.io.File(s"$sf/documents.parquet").exists)
+    // q_text_curation_funnel reads the dedup pack's dedup_shingle_sets
+    // store; resolve it first so it counts in neither run
+    Dedup.shingleSetsCached(spark, sf)
+    assertStoresStable(pack("q_text_"), 0)
+  }
+
+  test("sim queries leave no persisted RDDs, the same on a rerun") {
+    assume(new java.io.File(s"$sf/embeddings.parquet").exists)
+    assertStoresStable(pack("q_sim_"), 0)
+  }
+
+  test("stream queries leave no persisted RDDs, the same on a rerun") {
+    assume(new java.io.File(s"$sf/events.parquet").exists)
+    assertStoresStable(pack("q_stream_"), 0)
+  }
 }

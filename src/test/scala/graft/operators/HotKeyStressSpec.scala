@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{ShuffleMeter, SparkSuite}
+import graft.{Metrics, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -27,9 +27,8 @@ class HotKeyStressSpec extends AnyFunSuite with Matchers with SparkSuite {
       (9L, "solo shingle"))
     val sh = (hot ++ rare).toDF("doc_id", "s")
 
-    var pairs: Array[(Long, Long)] = Array.empty
-    val m = ShuffleMeter.measure(spark) {
-      pairs = Dedup.pairCounts(spark, sh, maxDf = Cap)
+    val (pairs, m) = Metrics.measure(spark) {
+      Dedup.pairCounts(spark, sh, maxDf = Cap)
         .select("d1", "d2").as[(Long, Long)].collect().sorted
     }
     // only the two rare co-occurrences survive; none of the ~2M
@@ -49,9 +48,8 @@ class HotKeyStressSpec extends AnyFunSuite with Matchers with SparkSuite {
       (6L, 8001L), (8L, 8001L))
     val sigs = (hot ++ rare).toDF("doc_id", "sig")
 
-    var pairs: Array[(Long, Long, Long)] = Array.empty
-    val m = ShuffleMeter.measure(spark) {
-      pairs = Multimodal.framePairs(spark, sigs, maxDf = Cap)
+    val (pairs, m) = Metrics.measure(spark) {
+      Multimodal.framePairs(spark, sigs, maxDf = Cap)
         .select("d1", "d2", "n_shared").as[(Long, Long, Long)]
         .collect().sorted
     }
@@ -67,9 +65,8 @@ class HotKeyStressSpec extends AnyFunSuite with Matchers with SparkSuite {
     val normal = Seq((5000L, 1, "NK"), (5001L, 1, "NK"), (5002L, 1, "NK"))
     val bands = (hot ++ normal).toDF("doc_id", "band", "key")
 
-    var pairs: Array[(Long, Long)] = Array.empty
-    val m = ShuffleMeter.measure(spark) {
-      pairs = Dedup.bandPairs(bands, maxBucket = Cap)
+    val (pairs, m) = Metrics.measure(spark) {
+      Dedup.bandPairs(bands, maxBucket = Cap)
         .as[(Long, Long)].collect()
     }
     // normal bucket: full clique (3 pairs)
@@ -159,9 +156,8 @@ class HotKeyStressSpec extends AnyFunSuite with Matchers with SparkSuite {
       (100002L, "https://example.com/solo")).toDF("doc_id", "url")
     val docs = hot.unionByName(rare)
 
-    var groups: Array[(String, Long, Long)] = Array.empty
-    val m = ShuffleMeter.measure(spark) {
-      groups = TextAnalysis.urlDedupGroups(docs)
+    val (groups, m) = Metrics.measure(spark) {
+      TextAnalysis.urlDedupGroups(docs)
         .select("canon", "n_docs", "keep_doc")
         .as[(String, Long, Long)].collect().sortBy(_._1)
     }
@@ -186,9 +182,8 @@ class HotKeyStressSpec extends AnyFunSuite with Matchers with SparkSuite {
           lit(" v"), col("id"), lit(" w"), col("id")).as("text"))
       .as[(Long, String)]
 
-    var rows: Array[(Long, Long, Long, Long)] = Array.empty
-    val m = ShuffleMeter.measure(spark) {
-      rows = TextAnalysis.noveltyFromGrams(TextAnalysis.gramDigests(docs))
+    val (rows, m) = Metrics.measure(spark) {
+      TextAnalysis.noveltyFromGrams(TextAnalysis.gramDigests(docs))
         .select("doc_id", "n_grams", "n_novel", "novelty_ppm")
         .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
     }
@@ -261,9 +256,8 @@ class HotKeyStressSpec extends AnyFunSuite with Matchers with SparkSuite {
       (col("id") % 1000 + 1).as("rev"),
       (col("id") % 3 === 0).as("is_del"),
       (col("id") % 3 === 1).as("is_upd"))
-    var out: Array[org.apache.spark.sql.Row] = Array.empty
-    val m = graft.ShuffleMeter.measure(spark) {
-      out = ScaleOps.retractMaintain(fact).collect()
+    val (out, m) = Metrics.measure(spark) {
+      ScaleOps.retractMaintain(fact).collect()
     }
     // correctness under skew: the hot group survives with the exact
     // post-CDC count (2/3 of its rows deleted... is_del drops 1/3)
@@ -317,9 +311,8 @@ class HotKeyStressSpec extends AnyFunSuite with Matchers with SparkSuite {
           .cast("long").as("n_chars"))
       .write.parquet(s"$dir/documents.parquet")
 
-    var got: Array[(Long, Long)] = Array.empty
-    val m = ShuffleMeter.measure(spark) {
-      got = graft.SparkEntry.queries("q_dedup_ppjoin")(spark, dir)
+    val (got, m) = Metrics.measure(spark) {
+      graft.SparkEntry.queries("q_dedup_ppjoin")(spark, dir)
         .select("d1", "d2").collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted
     }

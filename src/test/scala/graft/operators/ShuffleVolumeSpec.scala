@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{ShuffleMeter, SparkEntry, SparkSuite, Tables}
+import graft.{Metrics, SparkEntry, SparkSuite, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -15,9 +15,9 @@ class ShuffleVolumeSpec extends AnyFunSuite with Matchers with SparkSuite {
   private def haveData = new java.io.File(s"$sf/documents.parquet").exists
 
   private def shuffleWrite(q: String): Long =
-    ShuffleMeter.measure(spark) {
-      SparkEntry.queries(q)(spark, sf).count(): Unit
-    }.shuffleWrite
+    Metrics.measure(spark) {
+      SparkEntry.queries(q)(spark, sf).count()
+    }._2.shuffleWrite
 
   private lazy val textBytes: Long =
     Tables.documents(spark, sf)
@@ -27,7 +27,7 @@ class ShuffleVolumeSpec extends AnyFunSuite with Matchers with SparkSuite {
     assume(haveData)
     // the shuffle carries (digest, doc_id) rows + partial-agg overhead;
     // the corpus text itself must stay map-side. The lower bound guards
-    // the METER: a broken listener reporting 0 would hollow out every
+    // the METER: a broken collector reporting 0 would hollow out every
     // assertion in this suite.
     val w = shuffleWrite("q_dedup_exact")
     w should be > 0L

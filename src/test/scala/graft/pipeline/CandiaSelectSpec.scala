@@ -1,13 +1,11 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import graft.SparkSuite
+import graft.{Metrics, SparkSuite}
 import graft.ms.{AdjustedPeak, ComponentPeaks, ParafacModelRow, SliceTensor}
 import graft.ms.ops.{Decomposer, Indexing, TensorizeOp}
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -120,31 +118,6 @@ class CandiaSelectSpec extends AnyFunSuite with Matchers with SparkSuite {
     } finally Files.delete(out)
   }
 
-  /** Spark jobs started by `body` on this thread. */
-  private def jobsOf(body: => Unit): Int = {
-    val tag = "graft.test.jobs"
-    val id = java.util.UUID.randomUUID().toString
-    val started = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) == id))
-          started.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, id)
-    try {
-      body
-      // listener delivery is async: wait until the count stops moving
-      var prev = -1
-      while (prev != started.get) { prev = started.get; Thread.sleep(300) }
-      started.get
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("select equals the relational path: best models, spectrum index, " +
     "sample modes and mzXML bytes") {
     val fx = fixture
@@ -190,14 +163,14 @@ class CandiaSelectSpec extends AnyFunSuite with Matchers with SparkSuite {
     // written. The same two stage-8/9 calls on a result composed
     // relationally, as the benchmark's traced pipeline composes it, ran
     // 30 with its selection.
-    val jobs = jobsOf {
+    val (_, m) = Metrics.measure(spark) {
       val r = CandiaPipeline.select(spark, fx.peaks, fx.tensors, fx.models,
         fx.counts, cfg)
       CandiaPipeline.collectSampleModes(spark, r)._2.count()
       CandiaPipeline.exportBestSpectra(spark, r, s"$slicesDir.mzXML", cfg)
     }
     Files.deleteIfExists(Paths.get(s"$slicesDir.mzXML"))
-    jobs should be <= 5
+    m.jobs should be <= 5
   }
 
   test("a slice store written from no rows reads back empty") {
