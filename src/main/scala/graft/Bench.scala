@@ -80,11 +80,12 @@ object Bench {
     // warm the session (codegen, parquet footer cache, shuffle infra) so
     // the first measured query isn't charged the JVM startup — and touch
     // EVERY fact table, or the alphabetically-first query per table pays
-    // the first-scan cost and per-query numbers misattribute it
+    // the first-scan cost (and its schema inference) and per-query
+    // numbers misattribute it
     spark.range(1 << 20).selectExpr("sum(id)").collect()
     Seq("lineitem", "orders", "events", "documents", "embeddings")
       .foreach { t =>
-        try spark.read.parquet(s"$sfDir/$t.parquet").count()
+        try Tables.load(spark, sfDir, t).count()
         catch { case NonFatal(e) =>
           System.err.println(s"[bench] warm-up read of $t failed: $e")
         }

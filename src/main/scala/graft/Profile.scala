@@ -72,7 +72,7 @@ object Profile {
         rows.foreach { n =>
           total += m.wallS
           println(f"[profile] $name rep $r: ${m.wallS}%.2f s ($n rows, " +
-            s"${m.jobs} jobs, ${m.tasks} tasks, " +
+            s"${m.jobs} jobs (${m.jobsOutsideSql} outside SQL), ${m.tasks} tasks, " +
             s"${spark.sparkContext.getPersistentRDDs.size} persistent RDDs, " +
             s"${m.cachedMb} MB cached, gc ${m.gcMs} ms, heap ${m.heapMb} MB, " +
             s"shuffle w ${m.shuffleWrite >> 10} KiB / r ${m.shuffleRead >> 10} KiB)")

@@ -83,15 +83,21 @@ object StoreBuilds {
       r
     }
 
+  /** [[cached]] without the ledger: session values that are not
+    * stores (scratch dirs, table schemas) share the stores' lifetime
+    * but stay out of `snapshot`, so BENCH_BUILDS keeps its key set. */
+  private[graft] def unledgered[T](s: SparkSession, d: String, key: String)(make: => T): T =
+    session(s).getOrElseUpdate((d, key), make).asInstanceOf[T]
+
   /** One scratch directory per (session, dataset dir, prefix), not
     * ledgered, deleted at JVM exit — so a query run many times in one
     * session reuses one dir instead of leaking one per call. */
   def scratchDir(s: SparkSession, d: String, prefix: String): String =
-    session(s).getOrElseUpdate((d, "scratch:" + prefix), {
+    unledgered(s, d, "scratch:" + prefix) {
       val p = java.nio.file.Files.createTempDirectory(prefix)
       scratch.add(p)
       p.toString
-    }).asInstanceOf[String]
+    }
 
   /** The durable parquet store at `path`, read with its `schema`, or
     * None when nothing exists there. A known schema costs no inference
@@ -135,7 +141,7 @@ object StoreBuilds {
     })
   }
 
-  /** Number of stores (scratch dirs included) held for `applicationId`. */
+  /** Number of stores (unledgered values included) held for `applicationId`. */
   private[graft] def entries(applicationId: String): Int =
     sessions.get(applicationId).fold(0)(_.size)
 

@@ -13,8 +13,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * same plans prune partitions for free.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table's schema is inferred once per session: inference reads a
+    * footer in a Spark job outside any SQL execution, and every later
+    * read passes the schema it found, so it starts no job. The schema
+    * is held in the session's [[StoreBuilds]] map, out of the ledger,
+    * keyed by the path and its file status (modification time and
+    * length), so a table rewritten in place is inferred again. It is
+    * whatever the footer says: `events.ts` has shipped as two physical
+    * types (see [[events]]). */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val schema = StoreBuilds.unledgered(spark, path,
+      s"schema@${st.getModificationTime}/${st.getLen}")(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -45,6 +45,19 @@ object ScaleOps extends QueryPack {
                                1, 8))::BIGINT AS hv
           FROM documents, generate_series(0, ${n - 1}) t(sh))"""
 
+  /** Writes `df` partitioned by `by` to `path`, overwriting, and reads
+    * it back with the schema it was written with: the data columns,
+    * then the partition column, as Spark lays them out. */
+  private def layOut(
+      s: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame,
+      by: String,
+      path: String): org.apache.spark.sql.DataFrame = {
+    df.write.mode("overwrite").partitionBy(by).parquet(path)
+    s.read.schema(org.apache.spark.sql.types.StructType(
+      df.schema.filterNot(_.name == by) :+ df.schema(by))).parquet(path)
+  }
+
   // ------- multi-dimensional layout harness (zorder + hilbert share it:
   // one definition of the grid, the Morton code, the per-file min/max
   // stats, and the skip metric, so the two layouts can never diverge on
@@ -491,11 +504,9 @@ object ScaleOps extends QueryPack {
       run = (s, d) => {
         val layout =
           graft.StoreBuilds.scratchDir(s, d, "graft-pp") + "/layout"
-        Tables.events(s, d)
+        layOut(s, Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"))
-          .write.mode("overwrite").partitionBy("event_type").parquet(layout)
-        s.read.parquet(layout)
+            col("value")), "event_type", layout)
           .filter(col("event_type") === "click")
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
@@ -1644,14 +1655,14 @@ object ScaleOps extends QueryPack {
       run = (s, d) => {
         val layout =
           graft.StoreBuilds.scratchDir(s, d, "graft-dpp") + "/layout"
-        Tables.events(s, d)
-          .select(col("event_id"), col("event_type"), col("value"))
-          .write.mode("overwrite").partitionBy("event_type").parquet(layout)
+        val fact = layOut(s, Tables.events(s, d)
+          .select(col("event_id"), col("event_type"), col("value")),
+          "event_type", layout)
         val dim = Tables.events(s, d)
           .groupBy(col("event_type").as("dt"))
           .agg(count(lit(1)).as("n_dim"))
           .filter(expr("n_dim % 2 = 1"))
-        s.read.parquet(layout)
+        fact
           .join(broadcast(dim), col("event_type") === col("dt"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),

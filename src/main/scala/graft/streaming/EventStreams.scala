@@ -126,6 +126,17 @@ object EventStreams extends QueryPack {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
+  /** The rows the materialized views' foreachBatch writers store:
+    * per (event_type, hour) counts and micro-unit value sums. */
+  private val partialSchema = StructType(Seq(
+    StructField("event_type", StringType), StructField("h", LongType),
+    StructField("n_events", LongType), StructField("sum_value_micro", LongType)))
+
+  /** A view store as Spark lays it out: the partials, then the
+    * `batch_id` partition column. Its values are the batch ids and
+    * `base`, so it is a string. */
+  private val partialStore = partialSchema.add("batch_id", StringType)
+
   /** File-source stream over an events directory with `ts` normalized
     * to the ns-long contract (see [[graft.Tables.events]] — the
     * generator has shipped ts both as INT64 nanos and as
@@ -693,7 +704,8 @@ object EventStreams extends QueryPack {
             .start()
           q.awaitTermination()
         }
-        s.read.parquet(s"$out/batch_id=0").orderBy("event_type")
+        s.read.schema(stream.schema).parquet(s"$out/batch_id=0")
+          .orderBy("event_type")
       },
       oracle = Some("""
         SELECT event_type, count(*) AS n, round(sum(value), 4) AS sum_value
@@ -765,11 +777,8 @@ object EventStreams extends QueryPack {
           if (!storeFs.exists(storePath))
             s.createDataFrame(
               java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              StructType(Seq(StructField("event_type", StringType),
-                StructField("h", LongType),
-                StructField("n_events", LongType),
-                StructField("sum_value_micro", LongType))))
-          else s.read.parquet(store)
+              partialSchema)
+          else s.read.schema(partialStore).parquet(store)
         partials.groupBy("event_type", "h")
           .agg(sum(col("n_events")).as("n_events"),
             sum(col("sum_value_micro")).as("sum_value_micro"))
@@ -857,7 +866,7 @@ object EventStreams extends QueryPack {
             .start()
           q.awaitTermination()
         }
-        s.read.parquet(store)
+        s.read.schema(partialStore).parquet(store)
           .groupBy("event_type", "h")
           .agg(sum(col("n_events")).as("n_events"),
             sum(col("sum_value_micro")).as("sum_value_micro"))
